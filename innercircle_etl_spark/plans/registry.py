@@ -182,39 +182,38 @@ def pin_concurrently(*dfs: DataFrame) -> list[DataFrame]:
     other (a dependent frame would still compute correctly — Spark
     jobs are self-contained — but would re-run the dependency's
     lineage instead of reading its pin, the exact waste pinning
-    exists to avoid)."""
+    exists to avoid).
+
+    If any member fails, the members' pins are released (the caller
+    never receives their handles) and the first error is raised."""
     if len(dfs) == 1:
         return [dfs[0].localCheckpoint(eager=True)]
     from concurrent.futures import ThreadPoolExecutor
 
-    spark = dfs[0].sparkSession
-    # Snapshot the persisted-RDD ids so a failed group can release
-    # exactly the pins IT created (a sibling pin that already
-    # materialized would otherwise leak its blocks past the repo's
-    # release_pins discipline — the caller never sees the handles).
-    # Queries run one-at-a-time per session here, so ids appearing
-    # during this call belong to this group.
-    before = set(pinned_rdd_ids(spark))
+    pins: list = [None] * len(dfs)
+
+    def pin(i: int, df: DataFrame) -> None:
+        # Take the pin's handle BEFORE its materialising job: an eager
+        # localCheckpoint that fails leaves its RDD persisted and
+        # returns nothing to release. The lazy checkpoint plus a count
+        # of its own RDD runs the same jobs as the eager form.
+        pins[i] = df.localCheckpoint(eager=False)
+        _pin_rdd(pins[i]).count()
+
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        futs = [
-            pool.submit(lambda d=d: d.localCheckpoint(eager=True))
-            for d in dfs
-        ]
-        out, first_err = [], None
-        for f in futs:
-            try:
-                out.append(f.result())
-            except Exception as e:  # noqa: BLE001 — re-raised below
-                if first_err is None:
-                    first_err = e
-        if first_err is not None:
-            release_pins(
-                j
-                for rid, j in pinned_rdd_ids(spark).items()
-                if rid not in before
-            )
-            raise first_err
-        return out
+        futs = [pool.submit(pin, i, d) for i, d in enumerate(dfs)]
+        errs = [e for e in (f.exception() for f in futs) if e is not None]
+    if errs:
+        # release exactly this group's pins — never a pin another
+        # thread made while the group was in flight
+        release_pins(_pin_rdd(p) for p in pins if p is not None)
+        raise errs[0]
+    return pins
+
+
+def _pin_rdd(pinned: DataFrame):
+    """The java RDD holding a localCheckpoint'ed frame's blocks."""
+    return pinned._jdf.queryExecution().analyzed().rdd()
 
 
 def pinned_rdd_ids(spark: SparkSession) -> dict:

@@ -212,41 +212,72 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVF_NPROBE = 2
 
+# The embeddings corpus as (vec_id, label, v double[]) — the source
+# CTE of every IVF and mining oracle below.
+_EMB_CTE = """e AS (
+    SELECT vec_id, label,
+           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+    FROM embeddings
+)"""
+
+
+def _nearest_cells_cte(
+    name: str,
+    src: str,
+    keys: list[str],
+    payload: tuple[str, ...] = (),
+    vec: str = "v",
+    ccos: bool = False,
+    nprobe: int = 1,
+) -> str:
+    """CTE ``name``: every ``src`` row (keys..., payload...) with each
+    of its ``nprobe`` nearest cells of the ``cent`` CTE (cid, cv) —
+    cosine of ``vec`` to ``cv`` DESC, ties to the lower cid. The SQL
+    twin of _ivf_assign (nprobe=1, the inverted file) and _ivf_probes
+    (a query's probed cells). ``ccos`` also emits the winning cosine
+    (the manifest's mean)."""
+    cos = _COS_SQL.format(a=f"s.{vec}", b="c.cv")
+    cols = [*keys, *payload]
+    return f"""{name} AS (
+    SELECT {", ".join(cols)}, cid{", ccos" if ccos else ""} FROM (
+        SELECT {", ".join(f"s.{c}" for c in cols)}, c.cid,
+               {f"{cos} AS ccos," if ccos else ""}
+               row_number() OVER (
+                   PARTITION BY {", ".join(f"s.{k}" for k in keys)}
+                   ORDER BY {cos} DESC, c.cid ASC
+               ) AS rn
+        FROM {src} s CROSS JOIN cent c
+    ) WHERE rn <= {nprobe}
+)"""
+
+
+def _manifest_sql(where: str = "TRUE") -> str:
+    """The per-cell manifest SELECT over an ``assign`` CTE carrying
+    (vec_id, cid, ccos), restricted to rows where ``where`` holds —
+    the SQL twin of _index_manifest (floor-at-1e9 mean cosine)."""
+    return f"""SELECT cid,
+       CAST(COUNT(*) AS BIGINT) AS n_vectors,
+       MIN(vec_id) AS min_vec_id,
+       CAST(SUM(CAST(FLOOR(ccos * 1e9) AS BIGINT)) AS DOUBLE)
+         / COUNT(*) / 1e9 AS avg_cos
+FROM assign WHERE {where}
+GROUP BY cid"""
+
+
 def _ivf_oracle(cent_where: str) -> str:
     """The IVF probe/re-rank oracle with the codebook predicate as a
     parameter — one SQL body for the mod-CODEBOOK_MOD registration
     and the fixed-k control (the _sem_oracle convention)."""
     return f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-),
+WITH {_EMB_CTE},
 cent AS (
     SELECT vec_id AS cid, v AS cv FROM e WHERE {cent_where}
 ),
-assign AS (
-    SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-    ) WHERE rn = 1
-),
-probes AS (
-    SELECT vec_id AS query_id, v AS vq, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-        WHERE e.vec_id < {_N_QUERIES}
-    ) WHERE rn <= {_IVF_NPROBE}
-),
+q AS (SELECT vec_id AS query_id, v AS vq FROM e WHERE vec_id < {_N_QUERIES}),
+{_nearest_cells_cte("assign", "e", ["vec_id"], ("v",))},
+{_nearest_cells_cte(
+    "probes", "q", ["query_id"], ("vq",), vec="vq", nprobe=_IVF_NPROBE
+)},
 scored AS (
     SELECT p.query_id, a.vec_id AS neighbor_id,
            {_COS_SQL.format(a="p.vq", b="a.v")} AS cos
@@ -1086,27 +1117,11 @@ survivors AS (
 ),
 cent AS (
     SELECT vec_id AS cid, v AS cv FROM survivors
-    WHERE vec_id % {{cbmod}} = 0
+    WHERE vec_id % {CODEBOOK_MOD} = 0
 ),
-assign AS (
-    SELECT vec_id, cid, ccos FROM (
-        SELECT s.vec_id, c.cid,
-               {_COS_SQL.format(a="s.v", b="c.cv")} AS ccos,
-               row_number() OVER (
-                   PARTITION BY s.vec_id
-                   ORDER BY {_COS_SQL.format(a="s.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM survivors s CROSS JOIN cent c
-    ) WHERE rn = 1
-)
-SELECT cid,
-       CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       MIN(vec_id) AS min_vec_id,
-       CAST(SUM(CAST(FLOOR(ccos * 1e9) AS BIGINT)) AS DOUBLE)
-         / COUNT(*) / 1e9 AS avg_cos
-FROM assign GROUP BY cid
-""".replace("{cbmod}", str(CODEBOOK_MOD))
+{_nearest_cells_cte("assign", "survivors", ["vec_id"], ccos=True)}
+{_manifest_sql()}
+"""
 
 
 @register("ep9_vector_index_pipeline", oracle=_EP9_ORACLE)
@@ -1737,51 +1752,148 @@ def _mine_pos_neg(scored, group_col, order_cols, n_negs):
     )
 
 
+def _mine_sql(
+    leg: str, sfx: str, group: str, order: str, n_negs: int
+) -> str:
+    """CTE ``keep_{leg}{sfx}``: the SQL twin of _mine_pos_neg over
+    ``scored_{leg}{sfx}`` (which must carry ``is_neg``) — per
+    (group, is_neg) the ``rnk`` by ``order``, keeping the rank-1
+    positive and the top-``n_negs`` negatives with their scores."""
+    return f"""keep_{leg}{sfx} AS (
+    SELECT *, CAST(row_number() OVER (
+               PARTITION BY {group}, is_neg
+               ORDER BY {order}) AS INTEGER) AS rnk
+    FROM scored_{leg}{sfx}
+    QUALIFY (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {n_negs})
+)"""
+
+
+def _recall_oracle(
+    head: str,
+    exact_sql,
+    cand_sql,
+    batch_size: int,
+    key_cols: list[str],
+    group_cols: list[str],
+    out_aliases: dict[str, str] | None = None,
+    batches: int | None = None,
+) -> str:
+    """The recall-vs-exact oracle of a mining family — the SQL twin
+    of _recall_vs_exact over _recall_over_batches. After the ``head``
+    CTEs (corpus, codebook, inverted file — built ONCE), anchor batch
+    b [b x batch_size, (b+1) x batch_size) gets the exact chain
+    ``exact_sql(lo, hi, sfx)`` (into ``keep_x{sfx}``), the candidate
+    chain ``cand_sql(sfx)`` (into ``keep_a{sfx}``) and the hits/tot
+    pair of their diff keyed on ``key_cols``. ``batches=None`` is the
+    single-batch form (no suffix, no batch_id); otherwise one
+    suffixed chain per batch, the recall SELECTs UNION ALL'd with a
+    batch_id tag."""
+    aliases = out_aliases or {}
+    on_all = " AND ".join(f"k.{c} = a2.{c}" for c in key_cols)
+    gb = ", ".join(group_cols)
+    kg = ", ".join(f"k.{c}" for c in group_cols)
+    on_g = " AND ".join(f"t.{c} = h.{c}" for c in group_cols)
+    out = ", ".join(
+        f"t.{c} AS {aliases[c]}" if c in aliases else f"t.{c}"
+        for c in group_cols
+    )
+    sfxs = [""] if batches is None else [str(b) for b in range(batches)]
+    ctes, finals = [head], []
+    for b, s in enumerate(sfxs):
+        lo = b * batch_size
+        ctes.append(f"""{exact_sql(lo, lo + batch_size, s)},
+{cand_sql(s)},
+hits{s} AS (
+    SELECT {kg}, COUNT(*) AS n_hits
+    FROM keep_x{s} k JOIN keep_a{s} a2 ON {on_all}
+    GROUP BY {kg}
+),
+tot{s} AS (
+    SELECT {gb}, COUNT(*) AS n_true
+    FROM keep_x{s} GROUP BY {gb}
+)""")
+        finals.append(f"""SELECT {f"{s} AS batch_id, " if s else ""}{out},
+       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+       CAST(t.n_true AS BIGINT) AS n_true,
+       coalesce(h.n_hits, 0) * 1.0 / t.n_true AS recall
+FROM tot{s} t LEFT JOIN hits{s} h ON {on_g}""")
+    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(finals)
+
+
 # ------------------------------------- contrastive triplet mining
 
 _HN_ANCHORS = 40  # anchor batch size (FIXED — not corpus-proportional)
 _HN_NEGS = 3  # hard negatives mined per anchor
 
-# Exact-mining CTE chain (e → anchors → full-corpus scored → ranked),
-# shared between the ann_hard_negatives oracle and the
-# ann_hard_negatives_ann recall oracle (which re-ranks the same
-# anchors over IVF-cell candidates and diffs the kept sets).
-_HN_EXACT_CTES = f"""e AS (
-    SELECT vec_id, label,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+# The hard-negative family's index: corpus, the fixed-k codebook and
+# the (vec_id, label, v, cid, ccos) inverted file — shared by the
+# mining recall oracles and the index-maintenance rebuild oracle.
+_HN_INDEX_CTES = f"""{_EMB_CTE},
+cent AS (
+    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
 ),
-a AS (
+{_nearest_cells_cte(
+    "assign", "e", ["vec_id"], ("label", "v"), ccos=True
+)}"""
+
+
+def _hn_exact_sql(lo: int, hi: int, sfx: str = "") -> str:
+    """Anchor batch ``a{sfx}`` (the vec_id slice [lo, hi)), scored
+    against the FULL corpus and mined into ``keep_x{sfx}`` — the
+    exact chain (SQL twin of _hn_score_exact + _hn_mine)."""
+    return f"""a{sfx} AS (
     SELECT vec_id AS anchor_id, label AS anchor_label, v AS va
-    FROM e WHERE vec_id < {_HN_ANCHORS}
+    FROM e WHERE vec_id >= {lo} AND vec_id < {hi}
 ),
-scored AS (
+scored_x{sfx} AS (
     SELECT a.anchor_id, e.vec_id AS cand_id,
            (e.label != a.anchor_label) AS is_neg,
            {_COS_SQL.format(a="a.va", b="e.v")} AS cos
-    FROM a JOIN e ON e.vec_id != a.anchor_id
+    FROM a{sfx} a JOIN e ON e.vec_id != a.anchor_id
 ),
-ranked AS (
-    SELECT *, CAST(row_number() OVER (
-               PARTITION BY anchor_id, is_neg
-               ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-    FROM scored
-)"""
+{_mine_sql("x", sfx, "anchor_id", "cos DESC, cand_id ASC", _HN_NEGS)}"""
+
+
+def _hn_cand_sql(sfx: str = "") -> str:
+    """Anchor batch ``a{sfx}``'s probed cells of the ``assign``
+    inverted file, scored and mined into ``keep_a{sfx}`` — the IVF
+    candidate chain (SQL twin of _hn_score_ann + _hn_mine)."""
+    return f"""{_nearest_cells_cte(
+        f"probes{sfx}", f"a{sfx}", ["anchor_id"], ("anchor_label", "va"),
+        vec="va", nprobe=_IVF_NPROBE,
+    )},
+scored_a{sfx} AS (
+    SELECT p.anchor_id, s.vec_id AS cand_id,
+           (s.label != p.anchor_label) AS is_neg,
+           {_COS_SQL.format(a="p.va", b="s.v")} AS cos
+    FROM probes{sfx} p JOIN assign s
+      ON p.cid = s.cid AND s.vec_id != p.anchor_id
+),
+{_mine_sql("a", sfx, "anchor_id", "cos DESC, cand_id ASC", _HN_NEGS)}"""
+
+
+def _hn_recall_oracle(batches: int | None = None) -> str:
+    """ann_hard_negatives_ann's oracle (one batch) and, with
+    ``batches``, the amortized forms' per-batch replay."""
+    return _recall_oracle(
+        _HN_INDEX_CTES,
+        _hn_exact_sql,
+        _hn_cand_sql,
+        _HN_ANCHORS,
+        ["anchor_id", "is_neg", "cand_id"],
+        ["anchor_id", "is_neg"],
+        batches=batches,
+    )
+
 
 _HN_ORACLE = f"""
-WITH {_HN_EXACT_CTES},
-pos AS (
-    SELECT anchor_id, cand_id AS pos_id, cos AS pos_cos
-    FROM ranked WHERE NOT is_neg AND rank = 1
-),
-neg AS (
-    SELECT anchor_id, rank AS neg_rank, cand_id AS neg_id, cos AS neg_cos
-    FROM ranked WHERE is_neg AND rank <= {_HN_NEGS}
-)
-SELECT n.anchor_id, p.pos_id, p.pos_cos,
-       n.neg_rank, n.neg_id, n.neg_cos,
-       p.pos_cos - n.neg_cos AS margin
-FROM neg n JOIN pos p ON n.anchor_id = p.anchor_id
+WITH {_EMB_CTE},
+{_hn_exact_sql(0, _HN_ANCHORS)}
+SELECT n.anchor_id, p.cand_id AS pos_id, p.cos AS pos_cos,
+       n.rnk AS neg_rank, n.cand_id AS neg_id, n.cos AS neg_cos,
+       p.cos - n.cos AS margin
+FROM keep_x n JOIN keep_x p ON n.anchor_id = p.anchor_id
+WHERE n.is_neg AND NOT p.is_neg
 """
 
 
@@ -1977,64 +2089,6 @@ def _recall_vs_exact(
     )
 
 
-def _recall_ctes(
-    key_cols: list[str], group_cols: list[str], suffix: str = ""
-) -> str:
-    """hits/tot CTE pair over prior CTEs ``keep_x{suffix}`` (exact)
-    and ``keep_a{suffix}`` (candidate-path), keyed on ``key_cols``.
-    The suffix lets the amortized oracles instantiate one pair per
-    anchor batch inside a single WITH chain."""
-    on_all = " AND ".join(f"k.{c} = a2.{c}" for c in key_cols)
-    gb = ", ".join(group_cols)
-    kg = ", ".join(f"k.{c}" for c in group_cols)
-    return f"""hits{suffix} AS (
-    SELECT {kg}, COUNT(*) AS n_hits
-    FROM keep_x{suffix} k JOIN keep_a{suffix} a2 ON {on_all}
-    GROUP BY {kg}
-),
-tot{suffix} AS (
-    SELECT {gb}, COUNT(*) AS n_true
-    FROM keep_x{suffix} GROUP BY {gb}
-)"""
-
-
-def _recall_select(
-    group_cols: list[str],
-    out_aliases: dict[str, str] | None = None,
-    suffix: str = "",
-    select_prefix: str = "",
-) -> str:
-    """The final recall SELECT over _recall_ctes' hits/tot pair.
-    ``select_prefix`` prepends literal output columns (the amortized
-    oracles' batch_id tag)."""
-    aliases = out_aliases or {}
-    on_g = " AND ".join(f"t.{c} = h.{c}" for c in group_cols)
-    out = ", ".join(
-        f"t.{c} AS {aliases[c]}" if c in aliases else f"t.{c}"
-        for c in group_cols
-    )
-    return f"""SELECT {select_prefix}{out},
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(t.n_true AS BIGINT) AS n_true,
-       coalesce(h.n_hits, 0) * 1.0 / t.n_true AS recall
-FROM tot{suffix} t LEFT JOIN hits{suffix} h ON {on_g}"""
-
-
-def _recall_sql_tail(
-    key_cols: list[str],
-    group_cols: list[str],
-    out_aliases: dict[str, str] | None = None,
-) -> str:
-    """The oracle-side twin of _recall_vs_exact: hits/tot CTEs and
-    the final recall SELECT over prior CTEs ``keep_x`` (exact) and
-    ``keep_a`` (candidate-path), keyed on ``key_cols``."""
-    return (
-        _recall_ctes(key_cols, group_cols)
-        + "\n"
-        + _recall_select(group_cols, out_aliases)
-    )
-
-
 def _hn_kept_ann(
     spark: SparkSession, sf_dir: str, assign: DataFrame | None = None
 ) -> DataFrame:
@@ -2176,61 +2230,8 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------- hard-negative mining, IVF candidate path
 
-_HN_ANN_ORACLE = f"""
-WITH {_HN_EXACT_CTES},
-keep_x AS (
-    SELECT anchor_id, is_neg, cand_id FROM ranked
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
-),
-cent AS (
-    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
-),
-assign AS (
-    SELECT vec_id, label, v, cid FROM (
-        SELECT e.vec_id, e.label, e.v, c.cid,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-    ) WHERE rn = 1
-),
-probes AS (
-    SELECT vec_id AS anchor_id, anchor_label, va, cid AS pcid FROM (
-        SELECT e.vec_id, e.label AS anchor_label, e.v AS va, c.cid,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-        WHERE e.vec_id < {_HN_ANCHORS}
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-scored_a AS (
-    SELECT p.anchor_id, a2.vec_id AS cand_id,
-           (a2.label != p.anchor_label) AS is_neg,
-           {_COS_SQL.format(a="p.va", b="a2.v")} AS cos
-    FROM probes p JOIN assign a2
-      ON p.pcid = a2.cid AND a2.vec_id != p.anchor_id
-),
-ranked_a AS (
-    SELECT *, CAST(row_number() OVER (
-               PARTITION BY anchor_id, is_neg
-               ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-    FROM scored_a
-),
-keep_a AS (
-    SELECT anchor_id, is_neg, cand_id FROM ranked_a
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
-),
-{_recall_sql_tail(["anchor_id", "is_neg", "cand_id"],
-                  ["anchor_id", "is_neg"])}
-"""
 
-
-@register("ann_hard_negatives_ann", oracle=_HN_ANN_ORACLE)
+@register("ann_hard_negatives_ann", oracle=_hn_recall_oracle())
 def ann_hard_negatives_ann(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2274,134 +2275,52 @@ def ann_hard_negatives_ann(
 # --------------- hard-negative mining, AMORTIZED-index production shape
 
 _HN_AMORT_BATCHES = 2  # distinct anchor batches mined against ONE index
+_HN_AMORT_ORACLE = _hn_recall_oracle(_HN_AMORT_BATCHES)
 
 
-def _hn_amort_oracle() -> str:
-    """DuckDB replay of the amortized shape: ONE assign CTE (the
-    index), then per-batch exact/IVF kept sets and their recall
-    diff, UNION ALL'd with a batch_id tag."""
-    ctes = [
-        f"""e AS (
-    SELECT vec_id, label,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-),
-cent AS (
-    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
-),
-assign AS (
-    SELECT vec_id, label, v, cid FROM (
-        SELECT e.vec_id, e.label, e.v, c.cid,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-    ) WHERE rn = 1
-)"""
-    ]
-    finals = []
-    for b in range(_HN_AMORT_BATCHES):
-        lo, hi = b * _HN_ANCHORS, (b + 1) * _HN_ANCHORS
-        ctes.append(
-            f"""a{b} AS (
-    SELECT vec_id AS anchor_id, label AS anchor_label, v AS va
-    FROM e WHERE vec_id >= {lo} AND vec_id < {hi}
-),
-scored_x{b} AS (
-    SELECT a.anchor_id, e.vec_id AS cand_id,
-           (e.label != a.anchor_label) AS is_neg,
-           {_COS_SQL.format(a="a.va", b="e.v")} AS cos
-    FROM a{b} a JOIN e ON e.vec_id != a.anchor_id
-),
-ranked_x{b} AS (
-    SELECT *, CAST(row_number() OVER (
-               PARTITION BY anchor_id, is_neg
-               ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-    FROM scored_x{b}
-),
-keep_x{b} AS (
-    SELECT anchor_id, is_neg, cand_id FROM ranked_x{b}
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
-),
-probes{b} AS (
-    SELECT anchor_id, anchor_label, va, cid AS pcid FROM (
-        SELECT a.anchor_id, a.anchor_label, a.va, c.cid,
-               row_number() OVER (
-                   PARTITION BY a.anchor_id
-                   ORDER BY {_COS_SQL.format(a="a.va", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM a{b} a CROSS JOIN cent c
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-scored_a{b} AS (
-    SELECT p.anchor_id, s.vec_id AS cand_id,
-           (s.label != p.anchor_label) AS is_neg,
-           {_COS_SQL.format(a="p.va", b="s.v")} AS cos
-    FROM probes{b} p JOIN assign s
-      ON p.pcid = s.cid AND s.vec_id != p.anchor_id
-),
-ranked_a{b} AS (
-    SELECT *, CAST(row_number() OVER (
-               PARTITION BY anchor_id, is_neg
-               ORDER BY cos DESC, cand_id ASC) AS INTEGER) AS rank
-    FROM scored_a{b}
-),
-keep_a{b} AS (
-    SELECT anchor_id, is_neg, cand_id FROM ranked_a{b}
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
-),
-{_recall_ctes(["anchor_id", "is_neg", "cand_id"],
-              ["anchor_id", "is_neg"], suffix=str(b))}"""
-        )
-        finals.append(
-            _recall_select(
-                ["anchor_id", "is_neg"],
-                suffix=str(b),
-                select_prefix=f"{b} AS batch_id, ",
-            )
-        )
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(finals)
-
-
-def _hn_recall_over_batches(e: DataFrame, ann_kept_fn) -> DataFrame:
-    """The shared amortized mining loop: _HN_AMORT_BATCHES fixed
-    anchor batches, each mined by the exact full-corpus scorer (the
-    recall baseline production drops) and by ``ann_kept_fn(anchors)
-    -> scored frame`` (the candidate path under test), both through
-    the identical _hn_mine skeleton, recall-diffed per (anchor, leg)
-    and union'd with a batch_id tag. The three index forms — pinned
-    (amortized), persisted-flat, cell-partitioned — differ ONLY in
-    where the index lives and how much of it a batch reads; this one
-    loop is the structural proof the kept sets cannot."""
+def _recall_over_batches(
+    anchor_batch,
+    kept_exact,
+    kept_ann,
+    group_cols: list[str],
+    out_aliases: dict[str, str] | None = None,
+) -> DataFrame:
+    """The shared amortized mining loop of both mining families:
+    _HN_AMORT_BATCHES fixed anchor batches (``anchor_batch(b)``),
+    each mined by the exact full-corpus scorer (``kept_exact(anchors)``,
+    the recall baseline production drops) and by the candidate path
+    under test (``kept_ann(anchors)``), recall-diffed per
+    (anchor, leg) and union'd with a batch_id tag. The index forms —
+    pinned (amortized), persisted-flat, cell-partitioned — differ
+    ONLY in where the index lives and how much of it a batch reads;
+    this one loop is the structural proof the kept sets cannot."""
     out = None
     for b in range(_HN_AMORT_BATCHES):
-        anchors = _hn_anchor_batch(
-            e, b * _HN_ANCHORS, (b + 1) * _HN_ANCHORS
-        )
-        exact_kept = _hn_mine(_hn_score_exact(e, anchors)).select(
-            "anchor_id", "is_neg", "cand_id"
-        )
-        ann_kept = _hn_mine(ann_kept_fn(anchors)).select(
-            "anchor_id", "is_neg", "cand_id"
-        )
+        anchors = anchor_batch(b)
         rec = _recall_vs_exact(
-            exact_kept, ann_kept, ["anchor_id", "is_neg"]
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "anchor_id",
-            "is_neg",
-            "n_hits",
-            "n_true",
-            "recall",
+            kept_exact(anchors), kept_ann(anchors), group_cols, out_aliases
         )
+        rec = rec.select(F.lit(b).alias("batch_id"), *rec.columns)
         out = rec if out is None else out.unionByName(rec)
     return out
 
 
-@register("ann_hard_negatives_amortized", oracle=_hn_amort_oracle())
+def _hn_recall_over_batches(e: DataFrame, score_ann) -> DataFrame:
+    """The hard-negative family on _recall_over_batches: vec_id-slice
+    anchor batches, both legs through _hn_mine; ``score_ann(anchors)
+    -> scored frame`` is the candidate path under test."""
+    keys = ["anchor_id", "is_neg", "cand_id"]
+    return _recall_over_batches(
+        lambda b: _hn_anchor_batch(
+            e, b * _HN_ANCHORS, (b + 1) * _HN_ANCHORS
+        ),
+        lambda a: _hn_mine(_hn_score_exact(e, a)).select(*keys),
+        lambda a: _hn_mine(score_ann(a)).select(*keys),
+        ["anchor_id", "is_neg"],
+    )
+
+
+@register("ann_hard_negatives_amortized", oracle=_HN_AMORT_ORACLE)
 def ann_hard_negatives_amortized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2509,7 +2428,7 @@ def _persisted_index(
     }
 
 
-@register("ann_hard_negatives_persisted", oracle=_hn_amort_oracle())
+@register("ann_hard_negatives_persisted", oracle=_HN_AMORT_ORACLE)
 def ann_hard_negatives_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2566,33 +2485,17 @@ _INC_BATCH_MOD = 10  # vec_id % MOD == REM is "today's arriving batch"
 _INC_BATCH_REM = 7  # hits codebook ids too (7, 17, 27) — the merge
 # must be correct even when batch rows land in cells named after them
 
-_INC_UPDATE_ORACLE = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-),
-cent AS (
-    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
-),
-assign AS (
-    SELECT vec_id, cid, ccos FROM (
-        SELECT e.vec_id, c.cid,
-               {_COS_SQL.format(a="e.v", b="c.cv")} AS ccos,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-    ) WHERE rn = 1
-)
-SELECT cid,
-       CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       MIN(vec_id) AS min_vec_id,
-       CAST(SUM(CAST(FLOOR(ccos * 1e9) AS BIGINT)) AS DOUBLE)
-         / COUNT(*) / 1e9 AS avg_cos
-FROM assign GROUP BY cid
-"""
+
+def _index_rebuild_oracle(survives: str = "TRUE") -> str:
+    """The oracle of every index-maintenance form (append, compact,
+    delete): the per-cell manifest of a FULL single-pass assignment
+    of the rows for which ``survives`` holds. With a fixed codebook
+    the per-row argmax is independent of arrival order, so any
+    maintained index must equal this rebuild exactly."""
+    return f"WITH {_HN_INDEX_CTES}\n{_manifest_sql(survives)}\n"
+
+
+_INC_UPDATE_ORACLE = _index_rebuild_oracle()
 
 
 @register("ann_index_incremental_update", oracle=_INC_UPDATE_ORACLE)
@@ -2690,7 +2593,7 @@ def _index_manifest(assign: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-@register("ann_hard_negatives_cellpart", oracle=_hn_amort_oracle())
+@register("ann_hard_negatives_cellpart", oracle=_HN_AMORT_ORACLE)
 def ann_hard_negatives_cellpart(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3120,45 +3023,14 @@ _DEL_CELL = 13  # plus one whole-cell purge: every vector whose
 # nearest centroid is 13 is killed — the emptied-cell arm, exercised
 # at EVERY scale factor (cell 13 always holds at least vec 13)
 
-_DEL_ORACLE = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-),
-cent AS (
-    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
-),
-assign AS (
-    SELECT vec_id, cid, ccos FROM (
-        SELECT e.vec_id, c.cid,
-               {_COS_SQL.format(a="e.v", b="c.cv")} AS ccos,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY {_COS_SQL.format(a="e.v", b="c.cv")} DESC,
-                            c.cid ASC
-               ) AS rn
-        FROM e CROSS JOIN cent c
-    ) WHERE rn = 1
+_DEL_ID_KILL = f"NOT (vec_id % {_DEL_MOD} = {_DEL_REM})"  # survivor predicate
+_DEL_ORACLE = _index_rebuild_oracle(
+    f"{_DEL_ID_KILL} AND cid != {_DEL_CELL}"
 )
-SELECT cid,
-       CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       MIN(vec_id) AS min_vec_id,
-       CAST(SUM(CAST(FLOOR(ccos * 1e9) AS BIGINT)) AS DOUBLE)
-         / COUNT(*) / 1e9 AS avg_cos
-FROM assign
-WHERE NOT (vec_id % {_DEL_MOD} = {_DEL_REM}) AND cid != {_DEL_CELL}
-GROUP BY cid
-"""
-
-
 # The id-kill-only variant (no whole-cell purge) — the streaming
 # delete's oracle (plans/streaming_queries.py): rebuild from the
 # survivors of the residue-class kill-list alone.
-_DEL_ID_ORACLE = _INC_UPDATE_ORACLE.replace(
-    "FROM assign GROUP BY cid",
-    f"FROM assign\nWHERE NOT (vec_id % {_DEL_MOD} = {_DEL_REM})\nGROUP BY cid",
-)
-assert "WHERE NOT" in _DEL_ID_ORACLE  # replace anchor must hold
+_DEL_ID_ORACLE = _index_rebuild_oracle(_DEL_ID_KILL)
 
 
 def _kill_survivors(
@@ -3470,6 +3342,7 @@ def ann_index_versioned_compact(
 
 _EP13_ANCHORS = 20  # fixed anchor-doc batch (the hard-negatives lesson)
 _EP13_NEGS = 2  # cross-document hard negatives per anchor
+_EP13_IVF_K = 32  # chunk-space codebook: first chunk of docs 0..31
 
 
 def _ep13_anchor_batch(emb: DataFrame, lo: int, hi: int) -> DataFrame:
@@ -3530,45 +3403,92 @@ def _ep13_mine(scored: DataFrame) -> DataFrame:
     )
 
 
-# Exact ep13 CTE chain (chunks → emb → anchors → full-chunk-corpus
-# scored → ranked), shared between the ep13_contrastive_pairs oracle
-# and the ep13_contrastive_pairs_ann recall oracle (which re-ranks
-# the same anchors over same-doc ∪ IVF-cell candidates and diffs
-# the kept sets).
-def _ep13_exact_ctes() -> str:
+def _ep13_emb_ctes() -> str:
+    """Documents → chunk windows → ``emb`` (doc_id, chunk_idx, v)."""
     from innercircle_etl_spark.plans.text_queries import CHUNK_CTES_SQL
 
-    return f"""{CHUNK_CTES_SQL},
-{_RAG_EMB_CTE},
-a AS (SELECT doc_id AS a_doc, v AS va FROM emb
-      WHERE doc_id < {_EP13_ANCHORS} AND chunk_idx = 0),
-scored AS (
+    return f"{CHUNK_CTES_SQL},\n{_RAG_EMB_CTE}"
+
+
+_EP13_ORDER = "cos DESC, c_doc ASC, c_chunk ASC"
+
+
+def _ep13_exact_sql(lo: int, hi: int, sfx: str = "") -> str:
+    """Anchor batch ``a{sfx}`` (first chunks of docs [lo, hi)) scored
+    against every other chunk and mined into ``keep_x{sfx}`` — the
+    exact chain (SQL twin of _ep13_scored_exact + _ep13_mine)."""
+    return f"""a{sfx} AS (
+    SELECT doc_id AS a_doc, v AS va FROM emb
+    WHERE doc_id >= {lo} AND doc_id < {hi} AND chunk_idx = 0
+),
+scored_x{sfx} AS (
     SELECT a.a_doc, c.doc_id AS c_doc, c.chunk_idx AS c_chunk,
-           (c.doc_id = a.a_doc) AS is_pos,
+           (c.doc_id != a.a_doc) AS is_neg,
            {_COS_SQL.format(a="a.va", b="c.v")} AS cos
-    FROM a JOIN emb c
-      ON NOT (c.doc_id = a.a_doc AND c.chunk_idx = 0)),
-ranked AS (
-    SELECT *, CAST(row_number() OVER (
-        PARTITION BY a_doc, is_pos
-        ORDER BY cos DESC, c_doc ASC, c_chunk ASC) AS INTEGER) AS rnk
-    FROM scored)"""
+    FROM a{sfx} a JOIN emb c
+      ON NOT (c.doc_id = a.a_doc AND c.chunk_idx = 0)
+),
+{_mine_sql("x", sfx, "a_doc", _EP13_ORDER, _EP13_NEGS)}"""
+
+
+def _ep13_cand_sql(sfx: str = "") -> str:
+    """Anchor batch ``a{sfx}``'s same-doc chunks UNION its probed
+    cells of the ``assign`` inverted file, scored and mined into
+    ``keep_a{sfx}`` — the candidate chain (SQL twin of
+    _ep13_kept_ann)."""
+    return f"""{_nearest_cells_cte(
+        f"probes{sfx}", f"a{sfx}", ["a_doc"], ("va",),
+        vec="va", nprobe=_IVF_NPROBE,
+    )},
+scored_a{sfx} AS (
+    SELECT a_doc, c_doc, c_chunk, (c_doc != a_doc) AS is_neg,
+           {_COS_SQL.format(a="va", b="v")} AS cos
+    FROM (
+        SELECT a.a_doc, e2.doc_id AS c_doc, e2.chunk_idx AS c_chunk,
+               a.va, e2.v
+        FROM a{sfx} a JOIN emb e2
+          ON e2.doc_id = a.a_doc AND e2.chunk_idx != 0
+        UNION ALL
+        SELECT p.a_doc, s.doc_id, s.chunk_idx, p.va, s.v
+        FROM probes{sfx} p JOIN assign s
+          ON s.cid = p.cid AND s.doc_id != p.a_doc
+    )
+),
+{_mine_sql("a", sfx, "a_doc", _EP13_ORDER, _EP13_NEGS)}"""
+
+
+def _ep13_recall_oracle(batches: int | None = None) -> str:
+    """ep13_contrastive_pairs_ann's oracle (one batch) and, with
+    ``batches``, the amortized forms' per-batch replay over the
+    chunk-space index."""
+    head = f"""{_ep13_emb_ctes()},
+cent AS (
+    SELECT doc_id AS cid, v AS cv FROM emb
+    WHERE doc_id < {_EP13_IVF_K} AND chunk_idx = 0
+),
+{_nearest_cells_cte("assign", "emb", ["doc_id", "chunk_idx"], ("v",))}"""
+    return _recall_oracle(
+        head,
+        _ep13_exact_sql,
+        _ep13_cand_sql,
+        _EP13_ANCHORS,
+        ["a_doc", "is_neg", "c_doc", "c_chunk"],
+        ["a_doc", "is_neg"],
+        {"a_doc": "anchor_doc"},
+        batches,
+    )
 
 
 def _ep13_oracle() -> str:
     return f"""
-WITH {_ep13_exact_ctes()},
-pos AS (
-    SELECT a_doc, CAST(c_chunk AS INTEGER) AS pos_chunk, cos AS pos_cos
-    FROM ranked WHERE is_pos AND rnk = 1),
-neg AS (
-    SELECT a_doc, rnk AS neg_rank, c_doc AS neg_doc,
-           CAST(c_chunk AS INTEGER) AS neg_chunk, cos AS neg_cos
-    FROM ranked WHERE NOT is_pos AND rnk <= {_EP13_NEGS})
-SELECT n.a_doc AS anchor_doc, p.pos_chunk, p.pos_cos,
-       n.neg_rank, n.neg_doc, n.neg_chunk, n.neg_cos,
-       p.pos_cos - n.neg_cos AS margin
-FROM neg n JOIN pos p ON n.a_doc = p.a_doc
+WITH {_ep13_emb_ctes()},
+{_ep13_exact_sql(0, _EP13_ANCHORS)}
+SELECT n.a_doc AS anchor_doc, CAST(p.c_chunk AS INTEGER) AS pos_chunk,
+       p.cos AS pos_cos, n.rnk AS neg_rank, n.c_doc AS neg_doc,
+       CAST(n.c_chunk AS INTEGER) AS neg_chunk, n.cos AS neg_cos,
+       p.cos - n.cos AS margin
+FROM keep_x n JOIN keep_x p ON n.a_doc = p.a_doc
+WHERE n.is_neg AND NOT p.is_neg
 """
 
 
@@ -3630,73 +3550,7 @@ def ep13_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------- ep13 contrastive pairs, production candidate path
 
-_EP13_IVF_K = 32  # chunk-space codebook: first chunk of docs 0..31
-
-
-def _ep13_ann_oracle() -> str:
-    cos_assign = _COS_SQL.format(a="e2.v", b="c.cv")
-    cos_probe = _COS_SQL.format(a="a.va", b="c.cv")
-    return f"""
-WITH {_ep13_exact_ctes()},
-keep_x AS (
-    SELECT a_doc, NOT is_pos AS is_neg, c_doc, c_chunk FROM ranked
-    WHERE (is_pos AND rnk = 1) OR (NOT is_pos AND rnk <= {_EP13_NEGS})
-),
-cent AS (
-    SELECT doc_id AS cid, v AS cv FROM emb
-    WHERE doc_id < {_EP13_IVF_K} AND chunk_idx = 0
-),
-assign AS (
-    SELECT doc_id, chunk_idx, v, cid FROM (
-        SELECT e2.doc_id, e2.chunk_idx, e2.v, c.cid,
-               row_number() OVER (
-                   PARTITION BY e2.doc_id, e2.chunk_idx
-                   ORDER BY {cos_assign} DESC, c.cid ASC
-               ) AS rn
-        FROM emb e2 CROSS JOIN cent c
-    ) WHERE rn = 1
-),
-probes AS (
-    SELECT a_doc, va, cid AS pcid FROM (
-        SELECT a.a_doc, a.va, c.cid,
-               row_number() OVER (
-                   PARTITION BY a.a_doc
-                   ORDER BY {cos_probe} DESC, c.cid ASC
-               ) AS rn
-        FROM a CROSS JOIN cent c
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-cand AS (
-    SELECT a.a_doc, e2.doc_id AS c_doc, e2.chunk_idx AS c_chunk,
-           a.va, e2.v
-    FROM a JOIN emb e2
-      ON e2.doc_id = a.a_doc AND e2.chunk_idx != 0
-    UNION ALL
-    SELECT p.a_doc, s.doc_id, s.chunk_idx, p.va, s.v
-    FROM probes p JOIN assign s
-      ON s.cid = p.pcid AND s.doc_id != p.a_doc
-),
-scored_a AS (
-    SELECT a_doc, c_doc, c_chunk, (c_doc != a_doc) AS is_neg,
-           {_COS_SQL.format(a="va", b="v")} AS cos
-    FROM cand
-),
-ranked_a AS (
-    SELECT *, CAST(row_number() OVER (
-        PARTITION BY a_doc, is_neg
-        ORDER BY cos DESC, c_doc ASC, c_chunk ASC) AS INTEGER) AS rnk
-    FROM scored_a
-),
-keep_a AS (
-    SELECT a_doc, is_neg, c_doc, c_chunk FROM ranked_a
-    WHERE (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {_EP13_NEGS})
-),
-{_recall_sql_tail(["a_doc", "is_neg", "c_doc", "c_chunk"],
-                  ["a_doc", "is_neg"], {"a_doc": "anchor_doc"})}
-"""
-
-
-@register("ep13_contrastive_pairs_ann", oracle=_ep13_ann_oracle())
+@register("ep13_contrastive_pairs_ann", oracle=_ep13_recall_oracle())
 def ep13_contrastive_pairs_ann(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3804,110 +3658,27 @@ def _ep13_kept_ann(
     )
 
 
-def _ep13_amort_oracle() -> str:
-    """DuckDB replay of ep13's amortized shape: chunk/emb/cent/
-    assign CTEs ONCE (the index), then per-batch exact and
-    candidate-path kept sets and their recall diff, UNION ALL'd
-    with a batch_id tag."""
-    from innercircle_etl_spark.plans.text_queries import CHUNK_CTES_SQL
-
-    cos_assign = _COS_SQL.format(a="e2.v", b="c.cv")
-    cos_probe = _COS_SQL.format(a="a.va", b="c.cv")
-    ctes = [
-        f"""{CHUNK_CTES_SQL},
-{_RAG_EMB_CTE},
-cent AS (
-    SELECT doc_id AS cid, v AS cv FROM emb
-    WHERE doc_id < {_EP13_IVF_K} AND chunk_idx = 0
-),
-assign AS (
-    SELECT doc_id, chunk_idx, v, cid FROM (
-        SELECT e2.doc_id, e2.chunk_idx, e2.v, c.cid,
-               row_number() OVER (
-                   PARTITION BY e2.doc_id, e2.chunk_idx
-                   ORDER BY {cos_assign} DESC, c.cid ASC
-               ) AS rn
-        FROM emb e2 CROSS JOIN cent c
-    ) WHERE rn = 1
-)"""
-    ]
-    finals = []
-    for b in range(_HN_AMORT_BATCHES):
-        lo, hi = b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
-        ctes.append(
-            f"""a{b} AS (
-    SELECT doc_id AS a_doc, v AS va FROM emb
-    WHERE doc_id >= {lo} AND doc_id < {hi} AND chunk_idx = 0
-),
-scored_x{b} AS (
-    SELECT a.a_doc, c.doc_id AS c_doc, c.chunk_idx AS c_chunk,
-           (c.doc_id = a.a_doc) AS is_pos,
-           {_COS_SQL.format(a="a.va", b="c.v")} AS cos
-    FROM a{b} a JOIN emb c
-      ON NOT (c.doc_id = a.a_doc AND c.chunk_idx = 0)
-),
-ranked_x{b} AS (
-    SELECT *, CAST(row_number() OVER (
-        PARTITION BY a_doc, is_pos
-        ORDER BY cos DESC, c_doc ASC, c_chunk ASC) AS INTEGER) AS rnk
-    FROM scored_x{b}
-),
-keep_x{b} AS (
-    SELECT a_doc, NOT is_pos AS is_neg, c_doc, c_chunk FROM ranked_x{b}
-    WHERE (is_pos AND rnk = 1) OR (NOT is_pos AND rnk <= {_EP13_NEGS})
-),
-probes{b} AS (
-    SELECT a_doc, va, cid AS pcid FROM (
-        SELECT a.a_doc, a.va, c.cid,
-               row_number() OVER (
-                   PARTITION BY a.a_doc
-                   ORDER BY {cos_probe} DESC, c.cid ASC
-               ) AS rn
-        FROM a{b} a CROSS JOIN cent c
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-cand{b} AS (
-    SELECT a.a_doc, e2.doc_id AS c_doc, e2.chunk_idx AS c_chunk,
-           a.va, e2.v
-    FROM a{b} a JOIN emb e2
-      ON e2.doc_id = a.a_doc AND e2.chunk_idx != 0
-    UNION ALL
-    SELECT p.a_doc, s.doc_id, s.chunk_idx, p.va, s.v
-    FROM probes{b} p JOIN assign s
-      ON s.cid = p.pcid AND s.doc_id != p.a_doc
-),
-scored_a{b} AS (
-    SELECT a_doc, c_doc, c_chunk, (c_doc != a_doc) AS is_neg,
-           {_COS_SQL.format(a="va", b="v")} AS cos
-    FROM cand{b}
-),
-ranked_a{b} AS (
-    SELECT *, CAST(row_number() OVER (
-        PARTITION BY a_doc, is_neg
-        ORDER BY cos DESC, c_doc ASC, c_chunk ASC) AS INTEGER) AS rnk
-    FROM scored_a{b}
-),
-keep_a{b} AS (
-    SELECT a_doc, is_neg, c_doc, c_chunk FROM ranked_a{b}
-    WHERE (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {_EP13_NEGS})
-),
-{_recall_ctes(["a_doc", "is_neg", "c_doc", "c_chunk"],
-              ["a_doc", "is_neg"], suffix=str(b))}"""
-        )
-        finals.append(
-            _recall_select(
-                ["a_doc", "is_neg"],
-                {"a_doc": "anchor_doc"},
-                suffix=str(b),
-                select_prefix=f"{b} AS batch_id, ",
-            )
-        )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(finals)
+def _ep13_recall_over_batches(
+    emb: DataFrame, assign: DataFrame, cent: DataFrame
+) -> DataFrame:
+    """ep13 on _recall_over_batches: doc-slice anchor batches mined
+    exactly and through the same-doc ∪ IVF-cell candidate path
+    against the once-built ``assign`` index."""
+    return _recall_over_batches(
+        lambda b: _ep13_anchor_batch(
+            emb, b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
+        ),
+        lambda a: _ep13_kept_exact(emb, a),
+        lambda a: _ep13_kept_ann(emb, assign, cent, a),
+        ["a_doc", "is_neg"],
+        {"a_doc": "anchor_doc"},
     )
 
 
-@register("ep13_contrastive_pairs_amortized", oracle=_ep13_amort_oracle())
+_EP13_AMORT_ORACLE = _ep13_recall_oracle(_HN_AMORT_BATCHES)
+
+
+@register("ep13_contrastive_pairs_amortized", oracle=_EP13_AMORT_ORACLE)
 def ep13_contrastive_pairs_amortized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3956,26 +3727,7 @@ def ep13_contrastive_pairs_amortized(
     assign = _ivf_assign(
         emb, cent, ["doc_id", "chunk_idx"]
     ).localCheckpoint(eager=True)
-    out = None
-    for b in range(_HN_AMORT_BATCHES):
-        anchors = _ep13_anchor_batch(
-            emb, b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
-        )
-        rec = _recall_vs_exact(
-            _ep13_kept_exact(emb, anchors),
-            _ep13_kept_ann(emb, assign, cent, anchors),
-            ["a_doc", "is_neg"],
-            {"a_doc": "anchor_doc"},
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "anchor_doc",
-            "is_neg",
-            "n_hits",
-            "n_true",
-            "recall",
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
+    return _ep13_recall_over_batches(emb, assign, cent)
 
 
 ep13_contrastive_pairs_amortized.__doc__ = (
@@ -3997,7 +3749,7 @@ ep13_contrastive_pairs_ann.__doc__ = (
 )
 
 
-@register("ep13_contrastive_pairs_persisted", oracle=_ep13_amort_oracle())
+@register("ep13_contrastive_pairs_persisted", oracle=_EP13_AMORT_ORACLE)
 def ep13_contrastive_pairs_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4048,23 +3800,4 @@ def ep13_contrastive_pairs_persisted(
         },
     )
     assign, cent = idx["assign"], idx["centroids"]
-    out = None
-    for b in range(_HN_AMORT_BATCHES):
-        anchors = _ep13_anchor_batch(
-            chunks, b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
-        )
-        rec = _recall_vs_exact(
-            _ep13_kept_exact(chunks, anchors),
-            _ep13_kept_ann(chunks, assign, cent, anchors),
-            ["a_doc", "is_neg"],
-            {"a_doc": "anchor_doc"},
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "anchor_doc",
-            "is_neg",
-            "n_hits",
-            "n_true",
-            "recall",
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
+    return _ep13_recall_over_batches(chunks, assign, cent)

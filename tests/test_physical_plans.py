@@ -346,31 +346,24 @@ def _shuffle_exchanges(df) -> list[str]:
 
 def test_fused_fact_no_exchange_beyond_repartition(spark, sf_dir):
     """The fused single-pass fact scan's load-bearing plan property
-    (roi_cascade.build_cet_roi / ep5's fused legs; SCALE.md round-7
-    section): after the ONE repartition-by-coll exchange that feeds
-    the pinned fact, the floor percentile ((coll, ev_date) groupBy)
-    and the fused legs ((wallet, coll, ev_date, leg) groupBy) add NO
-    further exchange — HashPartitioning(coll) satisfies
-    ClusteredDistribution for any superset of {coll}. Until round 8
-    this was a comment-level claim (roi_cascade.py); here it is
-    asserted against the executed plan: every shuffle exchange in
-    both subtrees must be the REPARTITION_BY_COL on coll (the plan
-    string prints the cached InMemoryRelation's exchange once per
-    reference, so we classify rather than count)."""
+    (roi_cascade.pin_by_coll, shared by build_cet_roi and ep5's fused
+    legs; SCALE.md round-7 section): after the ONE repartition-by-coll
+    exchange that feeds the pinned fact, the floor percentile
+    ((coll, ev_date) groupBy) and the fused legs ((wallet, coll,
+    ev_date, leg) groupBy) add NO further exchange —
+    HashPartitioning(coll) satisfies ClusteredDistribution for any
+    superset of {coll}. Asserted against the executed plan of the
+    fact pin_by_coll returns: every shuffle exchange in both subtrees
+    must be the REPARTITION_BY_COL on coll (the plan string prints
+    the cached InMemoryRelation's exchange once per reference, so we
+    classify rather than count)."""
     from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
 
     from innercircle_etl_spark.operators.percentiles import percentile_disc
-    from innercircle_etl_spark.plans.roi_cascade import load_fact
+    from innercircle_etl_spark.plans.roi_cascade import load_fact, pin_by_coll
 
-    fact = (
-        load_fact(spark, sf_dir)
-        .repartition(F.col("coll"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    fact = pin_by_coll(load_fact(spark, sf_dir))
     try:
-        fact.count()  # materialize the cache, as the fused path does
-
         floor = percentile_disc(
             fact, ["coll", "ev_date"], "price", 0.2, out_col="floor_price"
         )

@@ -95,18 +95,27 @@ def test_agg_form_handles_dotted_column_names(spark):
     # Advice item 3: non-key columns are re-extracted from the
     # aggregate struct with getField, so names containing dots must
     # round-trip (dotted F.col paths would throw UNRESOLVED_COLUMN).
-    df = (
-        spark.range(20)
-        .select(
-            (F.col("id") % 4).alias("k"),
-            F.col("id").alias("ts"),
-            (F.col("id") * 7 % 11).alias("pay.load"),
-        )
+    # The second input puts the dots in the order column and the
+    # tiebreaker, which both forms must take verbatim too.
+    payload_dotted = spark.range(20).select(
+        (F.col("id") % 4).alias("k"),
+        F.col("id").alias("ts"),
+        (F.col("id") * 7 % 11).alias("pay.load"),
     )
-    agg = latest_per_key_agg(df, ["k"], "ts")
-    assert agg.columns == ["k", "ts", "pay.load"]
-    win = latest_per_key(df, ["k"], "ts")
-    assert _rows(agg, "k") == _rows(win, "k")
+    order_dotted = spark.range(20).select(
+        (F.col("id") % 4).alias("k"),
+        (F.col("id") % 3).alias("t.s"),  # ties within key groups
+        F.col("id").alias("tie.b"),  # unique -> total order
+        (F.col("id") * 7 % 11).alias("pay.load"),
+    )
+    for df, order_col, tiebreakers in (
+        (payload_dotted, "ts", []),
+        (order_dotted, "t.s", ["tie.b"]),
+    ):
+        agg = latest_per_key_agg(df, ["k"], order_col, tiebreakers)
+        assert agg.columns == df.columns
+        win = latest_per_key(df, ["k"], order_col, tiebreakers)
+        assert _rows(agg, "k") == _rows(win, "k")
 
 
 def test_agg_form_input_named_row_does_not_collide(spark):
@@ -177,6 +186,64 @@ def test_pin_concurrently_releases_siblings_on_failure(spark):
         pin_concurrently(good, bad)
     leaked = set(pinned_rdd_ids(spark)) - before
     assert not leaked, f"leaked pinned RDDs: {leaked}"
+
+
+def test_pin_concurrently_failure_spares_concurrent_pins(spark, tmp_path):
+    # A failed group releases exactly its OWN pins: a pin another
+    # thread makes while the group is in flight must survive. The
+    # failing member (one partition, so it cannot hold every slot)
+    # marks itself started, then waits for the release flag file.
+    import os
+    import threading
+    import time
+
+    from pyspark.sql.types import LongType
+
+    started = str(tmp_path / "started")
+    release = str(tmp_path / "release")
+
+    def wait_then_fail(x):
+        import os
+        import time
+
+        open(started, "w").close()
+        deadline = time.time() + 120
+        while not os.path.exists(release) and time.time() < deadline:
+            time.sleep(0.01)
+        raise ValueError("pin boom")
+
+    def persisted():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(j.id()) for j in jmap.values()}
+
+    good = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("x"))
+    bad = spark.range(1, numPartitions=1).select(
+        F.udf(wait_then_fail, LongType())("id").alias("e")
+    )
+    before = persisted()
+    errors = []
+
+    def run_group():
+        try:
+            pin_concurrently(good, bad)
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    group = threading.Thread(target=run_group)
+    group.start()
+    try:
+        deadline = time.time() + 120
+        while not os.path.exists(started) and time.time() < deadline:
+            time.sleep(0.01)
+        assert os.path.exists(started), "failing member never started"
+        other = spark.range(10, numPartitions=1).localCheckpoint(eager=True)
+        other_id = int(other._jdf.queryExecution().analyzed().rdd().id())
+    finally:
+        open(release, "w").close()
+        group.join(120)
+    assert not group.is_alive()
+    assert errors and "pin boom" in str(errors[0]), errors
+    assert persisted() - before == {other_id}
 
 
 def test_pin_concurrently_single_frame_fast_path(spark):
