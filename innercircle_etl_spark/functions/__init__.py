@@ -1,2 +1,2 @@
 """Column-expression libraries: text analysis, hashing/sketches,
-ABI-decode pandas UDFs, multimodal plumbing."""
+ABI-decode kernels, multimodal plumbing."""

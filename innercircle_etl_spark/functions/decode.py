@@ -1,4 +1,4 @@
-"""Ethereum ABI decode UDFs (reference D1/D2, SURVEY §2.10).
+"""Ethereum ABI decode kernels (reference D1/D2, SURVEY §2.10).
 
 The reference decodes OpenSea Wyvern trades row-by-row in pandas with
 web3 (`decode_utls.py:69-97` OrdersMatched log → price;
@@ -18,23 +18,32 @@ hex slicing — no web3 dependency, no per-row codec object:
   (`decode_utls.py:193-194`) and returns an ``<error> ...`` sentinel
   string on failure (`decode_utls.py:196-200`).
 
-Spark-first shape: Arrow-batched pandas UDFs doing vectorized string
-slicing (the reference's per-row ``df.apply`` + web3 codec is the
-slow path this replaces). Executor-side setup (the reference's
-``lru_cache`` contract cache, `decode_utls.py:174-184`) is
-unnecessary because the layouts are static constants.
+Spark-first shape: plain Catalyst column expressions (substring,
+rlike, startswith, lower), so the decode runs inside the JVM's
+whole-stage pipeline and a query that decodes starts no Python
+worker. The reference's per-row ``df.apply`` + web3 codec, and the
+executor-side codec cache it needs (`decode_utls.py:174-184`), have
+no counterpart because the layouts are static constants.
+
+The uint256 → ETH conversion stays exact: the word is turned into its
+decimal digits by ``java.math.BigInteger`` (through ``reflect`` on
+commons-lang3's ``NumberUtils.createBigInteger``, which is on Spark's
+classpath) and the string ``<digits>e-18`` is cast to double. Java's
+decimal parse rounds correctly, so the result is the double nearest
+to word / 10**18 — bit-identical to Python's ``int(word, 16) / 10**18``
+over the whole 256-bit range (pinned by tests/test_decode_kernels.py).
+Catalyst treats ``reflect`` as nondeterministic, so a filter placed
+above the price projection is not pushed below it.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
 
 ORDERS_MATCHED_TOPIC = "0xc4109843"  # decode_utls.py:111 prefix filter
 ATOMIC_MATCH_SELECTOR = "0xab834bab"  # decode_utls.py:218 prefix filter
 
-WEI_PER_ETH = 10**18
 _WORD = 64  # hex chars per 32-byte ABI word
 
 # sentinel contract (reference: '<error> decoding error: <exc>',
@@ -42,39 +51,42 @@ _WORD = 64  # hex chars per 32-byte ABI word
 DECODE_ERROR = "<error> decoding error"
 
 
-@F.pandas_udf(DoubleType())
-def orders_matched_price(data: pd.Series) -> pd.Series:
+def _hex_word(hexstr: Column, start: int, index: int) -> Column:
+    """ABI word ``index`` of a hex string whose words begin at 0-based
+    char ``start``; shorter (or empty) when the string is truncated."""
+    return F.substring(hexstr, start + index * _WORD + 1, _WORD)
+
+
+def orders_matched_price(data: Column) -> Column:
     """D1: OrdersMatched log ``data`` hex → trade price in ETH.
 
     price = uint256 at word 2 of the non-indexed data, / 1e18.
-    Malformed rows (short data / no 0x) decode to null — upstream
-    filters on the topic prefix make them impossible in the
-    reference pipeline, but a distributed engine must not crash on
-    one bad row.
+    Malformed rows (no 0x, short data, a non-hex word) decode to
+    null — upstream filters on the topic prefix make them impossible
+    in the reference pipeline, but a distributed engine must not
+    crash on one bad row. The CASE guard also keeps such words away
+    from the BigInteger parse, which would throw.
     """
-    word = data.str.slice(2 + 2 * _WORD, 2 + 3 * _WORD)
-    # fullmatch (not just a length check) so a correct-length word with
-    # non-hex characters yields null instead of raising in int() and
-    # failing the whole Arrow batch. fillna: null input rows.
-    ok = (
-        data.str.startswith("0x").fillna(False)
-        & word.str.fullmatch(r"[0-9a-fA-F]{64}").fillna(False)
+    word = _hex_word(data, 2, 2)
+    ok = data.startswith("0x") & word.rlike("^[0-9a-fA-F]{64}$")
+    digits = F.reflect(
+        F.lit("org.apache.commons.lang3.math.NumberUtils"),
+        F.lit("createBigInteger"),
+        F.concat(F.lit("0x"), word),
     )
-    ints = word.where(ok).map(
-        lambda h: int(h, 16) / WEI_PER_ETH, na_action="ignore"
-    )
-    return ints.astype("float64")
+    return F.when(ok, F.concat(digits, F.lit("e-18")).cast("double"))
 
 
-@F.pandas_udf(StringType())
-def atomic_match_payment_token(input_data: pd.Series) -> pd.Series:
+def atomic_match_payment_token(input_data: Column) -> Column:
     """D2: atomicMatch_ calldata → payment-token address
     (``addrs[6]``, lowercased '0x' + 40 hex chars) or the
-    ``<error>`` sentinel the reference emits on undecodable input.
+    ``<error>`` sentinel the reference emits on undecodable input
+    (a bad selector, a truncated word 6, or null).
     """
-    word6 = input_data.str.slice(10 + 6 * _WORD, 10 + 7 * _WORD)
-    ok = input_data.str.startswith(ATOMIC_MATCH_SELECTOR) & (
-        word6.str.len() == _WORD
+    word6 = _hex_word(input_data, 10, 6)
+    ok = input_data.startswith(ATOMIC_MATCH_SELECTOR) & (
+        F.length(word6) == _WORD
     )
-    token = "0x" + word6.str.slice(_WORD - 40, _WORD).str.lower()
-    return token.where(ok, DECODE_ERROR)
+    address = F.substring(word6, _WORD - 40 + 1, 40)
+    token = F.concat(F.lit("0x"), F.lower(address))
+    return F.when(ok, token).otherwise(F.lit(DECODE_ERROR))

@@ -3,7 +3,7 @@
 
 Fixtures are built deterministically FROM the events table inside
 each query (hex-encoded ABI words from event columns, expressed
-identically in the oracle SQL), so the pandas-UDF decode is
+identically in the oracle SQL), so the column-expression decode is
 hash-checkable against DuckDB doing the same slicing in SQL.
 
 Numeric discipline: the planted uint256 price stays < 2^53 wei so
@@ -50,7 +50,7 @@ def _orders_matched_logs(
     scan."""
     if ev is None:
         # the source parquet is a single file — fan out so the decode
-        # UDF runs on every core, not one task
+        # runs on every core, not one task
         ev = load(spark, sf_dir, "events").repartition(
             spark.sparkContext.defaultParallelism, F.expr("event_id div 4")
         )
@@ -91,8 +91,8 @@ GROUP BY trx_hash
 @register("d1_decode_log_price", oracle=_D1_ORACLE)
 def d1_decode_log_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1: OrdersMatched event-log decode → per-transaction trade
-    price (decode_utls.py:99-120): topic-prefix filter (P5), pandas
-    UDF hex decode, group-sum per trx_hash (A10).
+    price (decode_utls.py:99-120): topic-prefix filter (P5), hex
+    decode as column expressions, group-sum per trx_hash (A10).
 
     The per-trx sum runs over DECIMAL(38,18) (exact, associative) so
     Spark's partial-aggregation order can't flip a last ulp vs the

@@ -65,7 +65,7 @@ def payment_token_distribution(
 
 def price_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """eth_value == price cross-check (validation_query.sql:52-63):
-    the UDF-decoded per-trx price against an independent SQL-side
+    the kernel-decoded per-trx price against an independent SQL-side
     recomputation from the raw event values. Returns one row per
     trx with both values and a match flag; aggregate in the caller."""
     decoded = d1_decode_log_price(spark, sf_dir)

@@ -90,7 +90,7 @@ def test_salted_join_rejects_dim_preserving_how(spark):
 
 def test_orders_matched_price_non_hex_word_yields_null(spark):
     """A correct-length data word with non-hex chars must decode to
-    null, not blow up the Arrow batch (ADVICE #5)."""
+    null, not fail the task on the uint256 parse (ADVICE #5)."""
     good = "0x" + "00" * 64 + format(10**18, "064x")
     bad = "0x" + "00" * 64 + "zz" * 32  # right length, not hex
     df = spark.createDataFrame(

@@ -657,6 +657,23 @@ def test_funnel_states_single_shuffle_fold(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d1_decode_log_price",
+        "d2_decode_calldata_token",
+        "d12_trade_decode_pipeline",
+        "q1_quality_report",
+    ],
+)
+def test_abi_decode_runs_no_python_worker(spark, sf_dir, name):
+    """The ABI decode kernels are Catalyst expressions: no query that
+    decodes may plan a Python UDF node (each one starts Python
+    workers and ships every row through Arrow)."""
+    plan = plan_of(spark, sf_dir, name)
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
 def test_bpe_pair_stats_plan_shape(spark, sf_dir):
     """tok_bpe_pair_stats must be: ONE corpus-scale word-count
     shuffle + ONE vocabulary-bounded pair shuffle (both map-side
