@@ -271,17 +271,15 @@ def test_priority_window_names_all_resolve():
     assert not dupes, f"_PRIORITY has duplicate names: {dupes}"
 
 
-def test_sf_label_shared_between_bench_and_sweep():
-    """bench's artifact sf label and the sweep's demotion decision
-    use the SAME parser (round-13 advice items 1-2): nested
-    'sf10/data' must parse 10.0 in both, renamed fixtures keep their
-    prefix factor, and an unrelated ancestor like sf2020-era must
-    parse None (no silent demotion) rather than 2020."""
-    import bench
-    from innercircle_etl_spark.sfparse import parse_sf
+def test_sweep_parse_sf_rules():
+    """The sweep's demotion decision parses the fixture's scale
+    factor (round-13 advice items 1-2): nested 'sf10/data' must parse
+    10.0, renamed fixtures keep their prefix factor, and an unrelated
+    ancestor like sf2020-era must parse None (no silent demotion)
+    rather than 2020."""
+    from tools.sf1_spot_sweep import parse_sf
 
     assert parse_sf("/x/sf10/data") == 10.0
-    assert bench._parse_sf("/x/sf10/data") == 10.0
     assert parse_sf("/x/sf10_perm") == 10.0
     assert parse_sf("/x/sf0.1") == 0.1
     # renamed NESTED fixtures keep rename tolerance AND demotion
@@ -298,14 +296,37 @@ def test_sf_label_shared_between_bench_and_sweep():
     assert parse_sf("/data/sf2024_snapshot") is None
     assert parse_sf("/x/sf10/sf2024_snapshot") is None
     assert parse_sf("/x/sf1000/data") == 1000.0  # bound inclusive
-    # bench labels with the raw path when nothing parses — it must
-    # never raise after measurement (the round-12 lost-artifact bug)
-    assert bench._parse_sf("/plain/fixture") == "/plain/fixture"
-    import sys as _sys
 
-    _sys.path.insert(
-        0, "/root/repo/tools"
-    ) if "/root/repo/tools" not in _sys.path else None
-    import sf1_spot_sweep as sweep
 
-    assert sweep.parse_sf is parse_sf
+def test_sf10_demotion_selection():
+    """tools/sf1_spot_sweep.default_names: at sf10 (and ONLY there)
+    the DEMOTED_AT_SF10 rows are pulled out of a default sweep and
+    returned with their reason so the artifact records a marker;
+    explicit naming bypasses the mechanism entirely (main() only
+    calls default_names when no names were given) — that is the
+    regression-canary path SCALE.md's policy requires."""
+    from tools.sf1_spot_sweep import DEMOTED_AT_SF10, default_names
+
+    queries = ["graph_triangles", "graph_triangles_sampled", "j1", "q1"]
+    names, demoted = default_names(queries, "/x/.scratch/sf10")
+    assert "graph_triangles" not in names
+    assert "graph_triangles_sampled" in names and "q1" in names
+    assert demoted == {
+        "graph_triangles": DEMOTED_AT_SF10["graph_triangles"]
+    }
+    names, demoted = default_names(queries, "/x/.scratch/sf1")
+    assert "graph_triangles" in names and demoted == {}
+    # round-11 advice item 2: the match is the sf<N> prefix of ANY
+    # path component, not basename == 'sf10' — renamed copies,
+    # nested data dirs, and factor>100 fixtures all still demote
+    for path in ("/x/sf10-v2", "/x/sf10_perm", "/x/sf10/data", "/x/sf100"):
+        names, demoted = default_names(queries, path)
+        assert "graph_triangles" not in names, path
+        assert "graph_triangles" in demoted, path
+    # no sf component at all: demotion NOT applied (and main's
+    # stderr note fires); sf1_perm parses as 1 and keeps exact forms;
+    # an sf-prefixed ancestor DEEPER than the parent must not hijack
+    # the label (round-12 review: /data/sf2020-era/nested/fixture)
+    for path in ("/x/bigdata", "/x/sf1_perm", "/data/sf2020-era/nested/fixture"):
+        names, demoted = default_names(queries, path)
+        assert "graph_triangles" in names and demoted == {}, path

@@ -1,15 +1,14 @@
 """Run the judged composites end-to-end at sf1 and record wall clock
-plus shuffle volume — the round-6 verdict item 6: the per-operator
-sf1 bench exists (BENCH_sf1.json); this captures the COMPOSITE
-pipelines at 10x the tuning scale for SCALE.md.
+plus shuffle volume — the round-6 verdict item 6: captures the
+COMPOSITE pipelines at 10x the tuning scale for SCALE.md.
 
     python tools/composite_scale_run.py [sf_dir] [query ...]
 
-Shuffle metrics come from the driver's own status REST API (the UI
-is enabled just for this session): per-stage shuffle read/write
-bytes summed per query (delta between snapshots) and the single
-largest stage write, which is the number that predicts executor
-spill pressure at 100TB. Prints one JSON line.
+Shuffle metrics come from Spark's status store (the UI stays off):
+each query's run is a perfbench ``Tracer`` span, and the stages of
+the jobs submitted inside it give the summed shuffle read/write bytes
+and the single largest stage write, which is the number that
+predicts executor spill pressure at 100TB. Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -17,43 +16,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT_QUERIES = ["ep1_daily_pipeline", "ep8_corpus_pipeline", "ep10_rag_retrieval"]
-
-
-def stage_totals(ui: str, after_stage: int = -1) -> tuple[int, int, int, int]:
-    """Totals over stages with stageId > after_stage — windowing by
-    stage id makes max_stage_write per-QUERY (the first cut took the
-    max over every stage since app start, so a later query inherited
-    an earlier query's biggest stage)."""
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = [
-        s
-        for s in json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app_id}/stages"
-            )
-        )
-        if s.get("stageId", -1) > after_stage
-    ]
-    if after_stage >= 0 and not stages:
-        # the UI retains a bounded stage list (retainedStages); if the
-        # window is empty the earlier stages were evicted and a summed
-        # total would silently undercount — fail loudly instead
-        raise RuntimeError(
-            f"no stages with stageId > {after_stage}: UI evicted the "
-            "window; raise spark.ui.retainedStages"
-        )
-    w = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    r = sum(s.get("shuffleReadBytes", 0) for s in stages)
-    mx = max((s.get("shuffleWriteBytes", 0) for s in stages), default=0)
-    top = max((s.get("stageId", -1) for s in stages), default=after_stage)
-    return w, r, mx, top
 
 
 def main() -> None:
@@ -62,36 +28,44 @@ def main() -> None:
 
     from innercircle_etl_spark.plans import QUERIES
     from innercircle_etl_spark.session import drop_query_caches, get_spark
+    from perfbench.spans import StatusStore, Tracer
 
     spark = get_spark(
         app_name="composite_scale",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # keep every stage visible to the windowed snapshots: the
-            # default (1000) can evict a stage-heavy query's early
-            # stages and the summed shuffle totals would undercount
-            "spark.ui.retainedStages": "20000",
-        },
+        # keep every stage of a stage-heavy query in the status store:
+        # the default (1000) can evict its early stages and the summed
+        # shuffle totals would undercount
+        extra_conf={"spark.ui.retainedStages": "20000"},
     )
-    ui = spark.sparkContext.uiWebUrl
+    tracer = Tracer(spark.sparkContext._jsc.sc().dagScheduler().nextJobId, lambda: 0.0)
+    tracer.enabled = True
     out = {}
     for name in names:
         fn = QUERIES[name]
         # untimed warm-in at sf0.01 (JIT ramp), caches dropped after
         fn(spark, "/root/testdata/sf0.01").count()
         drop_query_caches(spark)
-        _, _, _, last_stage = stage_totals(ui)
-        t0 = time.time()
-        n = fn(spark, sf_dir).count()
-        wall = round(time.time() - t0, 2)
-        w1, r1, mx, _ = stage_totals(ui, after_stage=last_stage)
+        with tracer.span(name):
+            n = fn(spark, sf_dir).count()
         drop_query_caches(spark)
+        s = tracer.spans[-1]
+        stages = [st for job, st in StatusStore(spark).stages if s.job_lo <= job < s.job_hi]
+        if s.job_hi > s.job_lo and not stages:
+            # the store keeps a bounded stage list; if the query's
+            # stages were evicted a summed total would silently
+            # undercount — fail loudly instead
+            raise RuntimeError(
+                f"{name}: no stages of jobs {s.job_lo}..{s.job_hi - 1} in the "
+                "status store; raise spark.ui.retainedStages"
+            )
         out[name] = {
-            "wall_s": wall,
+            "wall_s": round(s.end - s.start, 2),
             "rows": n,
-            "shuffle_write_mb": round(w1 / 1e6, 1),
-            "shuffle_read_mb": round(r1 / 1e6, 1),
-            "max_stage_write_mb": round(mx / 1e6, 1),
+            "shuffle_write_mb": round(sum(st["shuffleWriteBytes"] for st in stages) / 1e6, 1),
+            "shuffle_read_mb": round(sum(st["shuffleReadBytes"] for st in stages) / 1e6, 1),
+            "max_stage_write_mb": round(
+                max((st["shuffleWriteBytes"] for st in stages), default=0) / 1e6, 1
+            ),
         }
         print(f"# {name}: {out[name]}", file=sys.stderr)
     print(json.dumps({"sf_dir": sf_dir, "composites": out}))

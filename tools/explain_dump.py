@@ -1,9 +1,8 @@
 """Dump .explain('formatted') for queries to plans/<tag>/<name>_<suffix>.txt.
 
 Usage:
-    python tools/explain_dump.py <tag> <suffix> [query ...]
+    python tools/explain_dump.py <tag> <suffix> <query> [query ...]
 
-With no query names, dumps the bench headline + LLM-headline sets.
 The dump runs at sf0.01 (plan shape is scale-invariant for these
 fixtures; the sf only changes AQE's runtime stats, and explain()
 prints the initial plan anyway).
@@ -25,12 +24,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> None:
-    tag, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
-    if not names:
-        import bench
-
-        names = bench.HEADLINE + bench.LLM_HEADLINE
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",

@@ -2,28 +2,28 @@
 each, with a per-query watchdog.
 
 The round-8 composite run caught ep10's 2-task straggler stage ONLY
-because something finally executed it at sf1 — the headline bench
-covers 20 queries and the correctness sweeps run at sf0.01/sf0.1,
-so a non-headline query whose plan degenerates at 10x data (a
-split-bound stage, an accidental quadratic blow-up) had no gate.
-This tool is that gate: run each named query (default: every
-batch-registry query NOT in bench.HEADLINE) once at ``sf_dir``,
-record wall + rows, and if a query exceeds the watchdog budget,
-cancel its jobs via the session's job-group API and record TIMEOUT
-instead of hanging the sweep.
+because something finally executed it at sf1 — the correctness
+sweeps run at sf0.01/sf0.1, so a query whose plan degenerates at
+10x data (a split-bound stage, an accidental quadratic blow-up) had
+no gate. This tool is that gate: run each named query (default:
+every batch-registry query) once at ``sf_dir``, record wall + rows,
+and if a query exceeds the watchdog budget, cancel its jobs via the
+session's job-group API and record TIMEOUT instead of hanging the
+sweep.
 
     python tools/sf1_spot_sweep.py [sf_dir] [budget_s] [name ...]
 
 Prints one JSON line; per-query progress on stderr. Queries are run
 in registry order. Timings here are single-shot coarse signals for
 finding pathologies (10x-data wall should sit within ~0.5-15x of
-the sf0.1 figure), not bench-grade minima.
+the sf0.1 figure), not benchmark-grade minima.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import threading
 import time
@@ -165,29 +165,47 @@ BUDGET_OVERRIDES: dict[str, float] = {
 }
 
 
-# The ONE sf parser, shared with bench.py so the demotion decision
-# and the bench artifact's sf label can never disagree (round-13
-# advice items 1-2; rules and rationale in the helper's module doc —
-# basename takes an sf<number> PREFIX, the parent fallback requires
-# an EXACT sf<number> component, so /data/sf2020-era/fixture no
-# longer hijacks the label). default_names still logs the matched
-# value whenever demotion fires.
-from innercircle_etl_spark.sfparse import parse_sf  # noqa: E402
+_MAX_SF = 1000.0  # largest plausible fixture factor, both arms;
+# testdata tops out at sf10 today and a factor-100 fixture is the
+# documented design ceiling — 1000 leaves headroom without admitting
+# year-like numbers (2020, 2024)
 
 
-def default_names(
-    queries, headline, sf_dir: str
-) -> tuple[list[str], dict[str, str]]:
+def parse_sf(sf_dir: str) -> float | None:
+    """The scale factor a fixture dir names, or None.
+
+    * basename: a ``sf<number>`` PREFIX matches — renamed fixtures
+      (``sf10-v2``, ``sf10_perm``, a symlink named ``sf10``) keep
+      their factor; the suffix is a human tag, never part of the
+      number. An implausible number (``sf2024_snapshot``) parses to
+      None and never falls through to the parent: the operator DID
+      name the dir sf<N>, and a silent parent parse would arm sf10
+      demotion on a date stamp.
+    * parent (one level up, only when the basename has no sf
+      prefix): the same prefix rule, but the number must end at a
+      non-alphanumeric boundary — nested renamed fixtures
+      (``sf10-v2/data``) keep demotion, while an unrelated ancestor
+      such as ``/data/sf2020-era/fixture`` fails the bound.
+    * anything else -> None; default_names then says that demotion
+      was NOT considered rather than guessing.
+    """
+    parts = sf_dir.rstrip("/").split(os.sep)
+    m = re.match(r"sf(\d+(?:\.\d+)?)", parts[-1])
+    if m:
+        return float(m.group(1)) if float(m.group(1)) <= _MAX_SF else None
+    if len(parts) >= 2:
+        m = re.match(r"sf(\d+(?:\.\d+)?)(?:$|[^0-9A-Za-z])", parts[-2])
+        if m and float(m.group(1)) <= _MAX_SF:
+            return float(m.group(1))
+    return None
+
+
+def default_names(queries, sf_dir: str) -> tuple[list[str], dict[str, str]]:
     """(names to run, demoted name -> reason) for a no-explicit-names
-    sweep: every batch-registry query outside the headline set, minus
-    — at sf>=10 only — the DEMOTED_AT_SF10 rows (which are returned
-    separately so the sweep records a marker instead of silence)."""
-    names = [
-        n
-        for n in queries
-        if n not in headline
-        and not any(n.startswith(p) for p in SKIP_PREFIXES)
-    ]
+    sweep: every batch-registry query, minus — at sf>=10 only — the
+    DEMOTED_AT_SF10 rows (which are returned separately so the sweep
+    records a marker instead of silence)."""
+    names = [n for n in queries if not any(n.startswith(p) for p in SKIP_PREFIXES)]
     demoted: dict[str, str] = {}
     sf = parse_sf(sf_dir)
     if sf is not None and sf >= 10:
@@ -216,13 +234,12 @@ def main() -> None:
     budget = float(sys.argv[2]) if len(sys.argv) > 2 else 120.0
     names = sys.argv[3:]
 
-    from bench import HEADLINE
     from innercircle_etl_spark.plans import QUERIES
     from innercircle_etl_spark.session import drop_query_caches, get_spark
 
     demoted: dict[str, str] = {}
     if not names:
-        names, demoted = default_names(QUERIES, HEADLINE, sf_dir)
+        names, demoted = default_names(QUERIES, sf_dir)
 
     spark = get_spark(app_name="sf1_spot_sweep")
     spark.sparkContext.setLogLevel("ERROR")
