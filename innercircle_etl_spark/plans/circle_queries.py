@@ -18,16 +18,21 @@ The reference builds its ``insider_to_circle_mapping`` daily:
 
 Here the whole thing is ONE DataFrame DAG over the lineitem fact
 (same column vocabulary as ep3), composed from the shared cascade
-core (``build_cet_roi``). Two deterministic SCD generations replace
+core (``_cet_roi_body``). Two deterministic SCD generations replace
 the reference's wall-clock cadence: the "yesterday" cohort is the
 cascade on data before 1998-01-01, the "today" cohort on all data —
-fixed literals, no now().
+fixed literals, no now(). Both generations run as one gen-keyed
+cascade: the fact is tagged ``gen`` (1 = all rows, 0 = the rows
+before the cutoff), pinned once by coll, and ``gen`` leads every
+key, window partition and join, so the two cohorts share every
+stage without mixing.
 
 Scale notes: every aggregate is a map-side-combinable groupBy on
-(wallet) or (wallet, coll); the only global windows (address_rank)
-run on the POST-AGGREGATION wallet dimension (|wallets| rows, not
-|fact|) — same dimension-sized-window argument as the ngram vocab
-rank; both top-200 selections compile to TakeOrderedAndProject.
+(gen, wallet) or (gen, wallet, coll); the only gen-wide windows
+(address_rank, the two top-200 selections) run on the
+POST-AGGREGATION wallet dimension (|wallets| rows per generation,
+not |fact|) — same dimension-sized-window argument as the ngram
+vocab rank; both top-200 selections compile to WindowGroupLimit.
 """
 
 from __future__ import annotations
@@ -37,9 +42,10 @@ from pyspark.sql import functions as F
 
 from innercircle_etl_spark.plans.registry import dsum, register
 from innercircle_etl_spark.plans.roi_cascade import (
-    build_cet_roi,
+    _cet_roi_body,
     cet_roi_ctes,
     load_fact,
+    pin_by_coll,
 )
 
 _N_CIRCLE = 200
@@ -135,112 +141,116 @@ FROM staging_c
 """
 
 
+def _top_per_gen(df: DataFrame, *order) -> DataFrame:
+    """The first ``_N_CIRCLE`` rows of each generation by ``order``
+    (unique within a generation): a per-gen row_number filter, which
+    Catalyst plans as WindowGroupLimit."""
+    n = F.row_number().over(Window.partitionBy("gen").orderBy(*order))
+    return df.withColumn("__n", n).filter(F.col("__n") <= _N_CIRCLE)
+
+
 def _circle_staging(fact: DataFrame) -> DataFrame:
-    """One SCD generation: both circles from one fact slice."""
-    # circle 1 — whale worth with concentration guard
-    worth = fact.groupBy("wallet", "coll").agg(
+    """Both circles of every SCD generation of a gen-tagged fact
+    pinned by coll, as one DAG: ``gen`` leads every key, so the
+    generations share each stage without mixing."""
+    # circle 1 — whale worth with concentration guard. The pin's
+    # coll partitioning clusters (gen, wallet, coll): no exchange
+    worth = fact.groupBy("gen", "wallet", "coll").agg(
         dsum("price").alias("coll_worth")
     )
-    ww = worth.groupBy("wallet").agg(dsum("coll_worth").alias("total_worth"))
-    # global rank over the wallet DIMENSION (post-aggregation), not
-    # the fact table — bounded by |wallets|
-    ranked_w = ww.select(
-        "wallet",
-        "total_worth",
-        F.row_number()
-        .over(Window.orderBy(F.col("total_worth").desc(), F.col("wallet")))
-        .cast("int")
-        .alias("address_rank"),
+    ww = worth.groupBy("gen", "wallet").agg(
+        dsum("coll_worth").alias("total_worth")
     )
     top3 = worth.withColumn(
         "rnk",
         F.row_number().over(
-            Window.partitionBy("wallet").orderBy(
+            Window.partitionBy("gen", "wallet").orderBy(
                 F.col("coll_worth").desc(), F.col("coll")
             )
         ),
     ).filter(F.col("rnk") <= 3)
     guard = (
-        top3.groupBy("wallet")
+        top3.groupBy("gen", "wallet")
         .agg(dsum("coll_worth").alias("top3_worth"))
-        .join(ww, "wallet")
+        .join(ww, ["gen", "wallet"])
         .filter(F.col("top3_worth") / F.col("total_worth") < 0.9)
-        .select("wallet")
     )
-    circle1 = (
-        ranked_w.join(guard, "wallet")
-        .orderBy("address_rank")
-        .limit(_N_CIRCLE)
-        .select(
-            F.col("wallet").alias("insider_id"),
-            "address_rank",
-            F.lit(1).alias("circle"),
-        )
-    )
+    # address_rank orders wallets by (total_worth desc, wallet), so
+    # that order picks the oracle's top 200 by rank; the rank itself
+    # is joined on once, below, for both circles
+    circle1 = _top_per_gen(
+        guard, F.col("total_worth").desc(), F.col("wallet")
+    ).select("gen", "wallet", F.lit(1).alias("circle"))
 
-    # circle 2 — top traders from the shared ROI cascade core.
-    # cet feeds the best-position window AND the total rollup: cache
-    # + eager materialization, or the whole cascade (floor percentile,
-    # as-of match, fallback join) executes once per consumer
-    cet = build_cet_roi(fact).cache()
-    cet.count()
-    best = (
-        cet.withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("wallet").orderBy(
-                    F.col("coll_gain").desc(), F.col("coll")
-                )
-            ),
-        )
-        .filter(F.col("rnk") == 1)
-        .select("wallet", F.col("coll_gain").alias("best_gain"))
+    # circle 2 — top traders from the shared ROI cascade core. The
+    # best position's gain is max(coll_gain), so best and total fold
+    # into one groupBy: cet has a single consumer and needs no cache
+    gains = _cet_roi_body(fact, ["gen"]).groupBy("gen", "wallet").agg(
+        F.max("coll_gain").alias("best_gain"),
+        dsum("coll_gain").alias("total_gain"),
     )
-    tot = cet.groupBy("wallet").agg(dsum("coll_gain").alias("total_gain"))
-    top_roi = (
-        best.join(tot, "wallet")
-        .filter(
+    circle2 = _top_per_gen(
+        gains.filter(
             (F.col("total_gain") > 0)
             & (F.col("best_gain") > 0)
             & (F.col("best_gain") / F.col("total_gain") < 0.9)
+        ),
+        F.col("total_gain").desc(),
+        F.col("wallet"),
+    ).select("gen", "wallet", F.lit(2).alias("circle"))
+
+    # per-gen rank over the wallet DIMENSION (post-aggregation), not
+    # the fact table — bounded by |wallets|. One lookup serves both
+    # circles: every AQE exchange over the pin runs its own stage
+    # (no reuse across copies), so each extra consumer of ww re-reads
+    # the fact
+    ranked_w = ww.select(
+        "gen",
+        "wallet",
+        F.row_number()
+        .over(
+            Window.partitionBy("gen").orderBy(
+                F.col("total_worth").desc(), F.col("wallet")
+            )
         )
-        .orderBy(F.col("total_gain").desc(), F.col("wallet"))
-        .limit(_N_CIRCLE)
+        .cast("int")
+        .alias("address_rank"),
     )
-    circle2 = top_roi.join(
-        ranked_w.select("wallet", "address_rank"), "wallet", "left"
-    ).select(
-        F.col("wallet").alias("insider_id"),
-        "address_rank",
-        F.lit(2).alias("circle"),
+    return (
+        circle1.unionByName(circle2)
+        .join(ranked_w, ["gen", "wallet"], "left")
+        .select(
+            "gen",
+            F.col("wallet").alias("insider_id"),
+            "address_rank",
+            "circle",
+        )
     )
-    return circle1.unionByName(circle2)
 
 
 @register("ep4_circles", oracle=_EP4_ORACLE)
 def ep4_circles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP4: the circle-cohort mapping with its SCD flag flip — see
     module docstring. Output = the post-merge
-    ``insider_to_circle_mapping``: yesterday's cohort flipped
-    ``is_current=false``, today's appended ``true``."""
+    ``insider_to_circle_mapping``: yesterday's cohort (gen 0) flipped
+    ``is_current=false``, today's (gen 1) appended ``true``."""
     fact = load_fact(spark, sf_dir)
-    prev = _circle_staging(
-        fact.filter(F.col("ev_date") < F.lit(_PREV_CUTOFF).cast("date"))
-    ).select(
+    tagged = fact.withColumn("gen", F.lit(1)).unionByName(
+        fact.filter(
+            F.col("ev_date") < F.lit(_PREV_CUTOFF).cast("date")
+        ).withColumn("gen", F.lit(0))
+    )
+    curr = F.col("gen") == 1
+    return _circle_staging(pin_by_coll(tagged)).select(
         "insider_id",
         "address_rank",
         "circle",
-        F.to_date(F.lit(_PREV_CUTOFF)).alias("created_at"),
-        F.lit(False).alias("is_current"),
+        F.when(curr, F.lit(_CURR_STAMP))
+        .otherwise(F.lit(_PREV_CUTOFF))
+        .cast("date")
+        .alias("created_at"),
+        curr.alias("is_current"),
     )
-    curr = _circle_staging(fact).select(
-        "insider_id",
-        "address_rank",
-        "circle",
-        F.to_date(F.lit(_CURR_STAMP)).alias("created_at"),
-        F.lit(True).alias("is_current"),
-    )
-    return prev.unionByName(curr)
 
 
 # ------------------------------------------------- ep7: posts feed

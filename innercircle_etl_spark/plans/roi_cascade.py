@@ -20,6 +20,8 @@ A11 wallet rollup → O1 global top-K.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -34,8 +36,10 @@ _TOP_WALLETS = 100
 
 def cet_roi_ctes(s: str = "", where: str = "1=1") -> str:
     """The fact→cet_roi CTE chain as oracle-SQL text, suffixed with
-    ``s`` and filtered by ``where`` so ep4's two SCD generations can
-    instantiate it twice alongside ep3's single use."""
+    ``s`` and filtered by ``where`` so ep4's oracle can instantiate it
+    once per SCD generation alongside ep3's single use. The Spark side
+    runs both generations in one pass instead (``_cet_roi_body`` with
+    ``extra_keys=("gen",)``)."""
     return f"""
 fact{s} AS (
     SELECT l_suppkey AS wallet, l_partkey AS coll, l_shipdate AS ev_date,
@@ -155,7 +159,7 @@ def load_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pin_by_coll(fact: DataFrame) -> DataFrame:
-    """The single-pass fact form shared by build_cet_roi (ep3, ep4)
+    """The single-pass fact form shared by build_cet_roi (ep3), ep4
     and ep5 (round-7 A/B, numbers in SCALE.md): ONE fact scan,
     repartitioned by ``coll`` and pinned. Every downstream grouping
     clusters on a superset of {coll} (floor: (coll, ev_date); latest
@@ -182,28 +186,40 @@ def build_cet_roi(fact: DataFrame) -> DataFrame:
     """fact → per-(wallet, collection) ROI rollup (the reference's
     cet_roi, update_etl.py:635-798): floor percentile → latest floor
     → as-of buy/sell match → floor fallback → rollup, over the
-    single-pass pinned fact (pin_by_coll). Shared by the ep3 top-K
-    cascade and the ep4 circle-cohort assembly."""
+    single-pass pinned fact (pin_by_coll), for the ep3 top-K cascade.
+    ep4 pins its gen-tagged fact itself and calls the body with
+    ``extra_keys``."""
     return _cet_roi_body(pin_by_coll(fact))
 
 
-def _cet_roi_body(fact: DataFrame) -> DataFrame:
+def _cet_roi_body(
+    fact: DataFrame, extra_keys: Sequence[str] = ()
+) -> DataFrame:
+    """The cascade over a pinned fact. ``extra_keys`` lead every key
+    (floor percentile, latest floor, as-of, floor join, rollup), so
+    one pass computes an independent cascade per key value: ep4 runs
+    both SCD generations at once with ``extra_keys=("gen",)``. The
+    pin's coll partitioning still satisfies every coll-superset
+    grouping."""
+    k = list(extra_keys)
     # A8: daily floor percentile, then W1: latest floor per collection
     floor_daily = percentile_disc(
-        fact, ["coll", "ev_date"], "price", 0.2, out_col="floor_price"
+        fact, [*k, "coll", "ev_date"], "price", 0.2, out_col="floor_price"
     )
-    latest_floor = latest_per_key(floor_daily, ["coll"], "ev_date").select(
-        "coll", "floor_price"
-    )
+    latest_floor = latest_per_key(
+        floor_daily, [*k, "coll"], "ev_date"
+    ).select(*k, "coll", "floor_price")
 
     # J8: buy/sell legs as two projections of the one fact table
     buys = fact.filter(F.col("flag") != "R").select(
+        *k,
         "wallet",
         "coll",
         F.col("ev_date").alias("buy_date"),
         F.col("price").alias("buy_price"),
     )
     sells = fact.filter(F.col("flag") == "R").select(
+        *k,
         "wallet",
         "coll",
         F.col("ev_date").alias("sell_date"),
@@ -225,18 +241,19 @@ def _cet_roi_body(fact: DataFrame) -> DataFrame:
     matched = asof_join(
         buys,
         sells,
-        keys=["wallet", "coll"],
+        keys=[*k, "wallet", "coll"],
         left_on="buy_date",
         right_on="sell_date",
         direction="forward",
         strict=False,
         right_tiebreakers=["s_okey", "s_line", "sell_price"],
-    ).select("wallet", "coll", "buy_date", "buy_price", "r_sell_price")
+    ).select(*k, "wallet", "coll", "buy_date", "buy_price", "r_sell_price")
 
     # J9: latest-floor fallback for unrealized positions
     gains = (
-        matched.join(F.broadcast(latest_floor), "coll")
+        matched.join(F.broadcast(latest_floor), [*k, "coll"])
         .select(
+            *k,
             "wallet",
             "coll",
             "buy_date",
@@ -249,7 +266,7 @@ def _cet_roi_body(fact: DataFrame) -> DataFrame:
     )
 
     # A3/A7: per-(wallet, collection) rollup
-    return gains.groupBy("wallet", "coll").agg(
+    return gains.groupBy(*k, "wallet", "coll").agg(
         F.count(F.lit(1)).alias("n_buys"),
         F.sum(F.when(F.col("realized"), 1).otherwise(0)).alias("n_realized"),
         F.min("buy_date").alias("first_buy_date"),

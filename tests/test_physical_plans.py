@@ -8,7 +8,8 @@ query survives a 1000-executor, 100TB run:
 - filters reach the parquet scan (PushedFilters)
 - projections prune the scan schema (ReadSchema)
 - aggregates run map-side partials before the shuffle
-- global top-K is TakeOrderedAndProject, never a full sort
+- global top-K is TakeOrderedAndProject (or a per-group
+  WindowGroupLimit), never a full sort
 - nothing degenerates into a cartesian product
 """
 
@@ -220,10 +221,13 @@ def test_embedding_dedup_joins_on_bucket(spark, sf_dir):
 
 
 def test_ep4_topk_avoids_full_sort(spark, sf_dir):
-    """Both circle top-200 selections compile to
-    TakeOrderedAndProject, never a global sort."""
+    """Both circle top-200 selections are per-generation row_number
+    limits that compile to WindowGroupLimit; no rank, window or top-K
+    moves all rows to one partition or range-sorts them globally."""
     plan = plan_of(spark, sf_dir, "ep4_circles")
-    assert "TakeOrderedAndProject" in plan, plan
+    assert "WindowGroupLimit" in plan, plan
+    assert "Exchange rangepartitioning" not in plan, plan
+    assert "Exchange SinglePartition" not in plan, plan
 
 
 def test_partition_pruning_on_date_partitioned_warehouse(spark, sf_dir):

@@ -132,12 +132,14 @@ DEMOTED_AT_SF10 = {
 # sits just under, so routine sweeps apply the recorded budget
 # instead of re-timing-out and forcing a fresh adjudication every
 # round. ep4_circles: sf1 single-shot completes in ~93 s vs the
-# 120 s default — sub-linear (6x wall for 10x data), and exactly its
-# plan shape (two date-sliced ROI-cascade SCD generations ≈ 2x the
-# ep3 single-generation control's 40.3 s + glue; NOTES.md round-12
-# sf1 sweep note). The override leaves headroom for same-session
-# GC/heap churn after heavy predecessors (the 5-10x overstatement
-# class documented in the verify skill).
+# 120 s default — sub-linear (6x wall for 10x data), measured when
+# its plan ran two date-sliced ROI-cascade SCD generations as two
+# DAGs (≈ 2x the ep3 single-generation control's 40.3 s + glue;
+# NOTES.md round-12 sf1 sweep note). ep4 now runs both generations
+# as one gen-keyed cascade (SCALE.md); the override stays until an
+# sf1 re-measure shows it is no longer needed. It leaves headroom
+# for same-session GC/heap churn after heavy predecessors (the 5-10x
+# overstatement class documented in the verify skill).
 BUDGET_OVERRIDES: dict[str, float] = {
     "ep4_circles": 240.0,
     # Round-15: three rows whose DOCUMENTED cold sf1 walls sit at or
