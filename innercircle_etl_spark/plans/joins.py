@@ -12,6 +12,7 @@ from innercircle_etl_spark.plans.registry import (
     duck_dsum,
     load,
     register,
+    scratch_dir,
 )
 
 
@@ -494,11 +495,9 @@ def x_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay the shuffle once at write time, never again at read time.
     (The merge hint pins SMJ so the demonstration doesn't degrade to
     a broadcast join at test scale.)"""
-    import os
     import shutil
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    base = f"{scratch}/bucketed_{os.path.basename(sf_dir)}"
+    base = scratch_dir("bucketed", sf_dir)
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"

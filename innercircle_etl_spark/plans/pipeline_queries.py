@@ -8,7 +8,6 @@ repaired exactly them (idempotence of U3+U6 composed).
 
 from __future__ import annotations
 
-import os
 import shutil
 from datetime import date
 
@@ -16,9 +15,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from innercircle_etl_spark.pipeline import run_daily, write_daily_partitioned
-from innercircle_etl_spark.plans.registry import dsum, duck_dsum, load, register
+from innercircle_etl_spark.plans.registry import (
+    dsum,
+    duck_dsum,
+    load,
+    register,
+    scratch_dir,
+)
 
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 _START, _END = "2001-06-01", "2001-06-30"
 _RUN_DATE = "2001-06-25"  # the stale "current" day
@@ -39,7 +43,7 @@ def seed_damaged_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Build the month aggregate with planted damage (three missing
     days + a half-loaded run date); returns the warehouse path.
     Split out so tests can run repair cycles against it directly."""
-    wh = f"{SCRATCH}/ep1_{os.path.basename(sf_dir)}"
+    wh = scratch_dir("ep1", sf_dir)
     shutil.rmtree(wh, ignore_errors=True)
     month = _month(spark, sf_dir)
     seed_src = month.filter(

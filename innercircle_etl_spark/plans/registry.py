@@ -20,11 +20,14 @@ are bit-identical. Helper: ``dsum`` below / ``DSUM`` SQL macro text.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from innercircle_etl_spark.session import local_cpus
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -55,6 +58,28 @@ def register(name: str, oracle: Optional[str] = None):
     return deco
 
 
+_REPO_SCRATCH = os.path.normpath(
+    os.path.join(os.path.dirname(__file__), "..", "..", ".scratch")
+)
+
+
+def scratch_dir(name: str, sf_dir: str, fresh: bool = False) -> str:
+    """``<root>/<name>_<fixture>``: one query's scratch directory for
+    one fixture. The root is ``$SPARK_GRAFT_SCRATCH`` read at each
+    call, else ``.scratch`` at the repo root (gitignored).
+    ``fresh`` empties it first (rmtree, then makedirs), so a run's
+    inputs are provably this run's: relying on each write overwriting
+    its artifact holds only while every run rewrites every artifact,
+    and a prior run's leftover would reach the oracle comparison
+    silently."""
+    root = os.environ.get("SPARK_GRAFT_SCRATCH", _REPO_SCRATCH)
+    path = f"{root}/{name}_{os.path.basename(sf_dir.rstrip('/'))}"
+    if fresh:
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+    return path
+
+
 # Columns written as parquet TIMESTAMP(NANOS), which Spark lacks: read
 # as long (see session.py nanosAsLong) and truncate to microseconds —
 # exactly what DuckDB's TIMESTAMP_NS→TIMESTAMP conversion does.
@@ -82,10 +107,7 @@ def _size_shuffle_once(spark: SparkSession) -> None:
     spark.conf.set(_SHUFFLE_SIZED_MARK, "1")
     if spark.conf.get("spark.sql.shuffle.partitions", "200") != "200":
         return
-    try:
-        n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:  # malformed env var → keep a sane local default
-        n = 32
+    n = local_cpus()
     if n > 0:
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
 

@@ -23,9 +23,8 @@ from innercircle_etl_spark.plans.registry import (
     davg,
     load,
     register,
+    scratch_dir,
 )
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 
 @register(
@@ -44,7 +43,7 @@ def s2_s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas CSV type-inference fragility (etl_utls.py:121) is exactly
     what we eliminate. Doubles survive because Spark writes
     shortest-round-trip representations."""
-    path = f"{SCRATCH}/csv_roundtrip_{os.path.basename(sf_dir)}"
+    path = scratch_dir("csv_roundtrip", sf_dir)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount"
     )
@@ -79,7 +78,7 @@ def s6_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema (update_etl.py:1290-1319 glob+parse, :1408 NDJSON). The
     reference parses nested JSON field-by-field in Python; Spark does
     schema-on-read and the nested access is a column expression."""
-    path = f"{SCRATCH}/json_docs_{os.path.basename(sf_dir)}"
+    path = scratch_dir("json_docs", sf_dir)
     docs = load(spark, sf_dir, "documents")
     docs.write.mode("overwrite").json(path)
     schema = T.StructType(
@@ -141,10 +140,7 @@ def s11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     you never rewrite old files to add a column. The write half is a
     REAL two-generation parquet write to scratch; the oracle
     recomputes the expectation relationally."""
-    import shutil
-
-    base = f"{SCRATCH}/s11_{os.path.basename(sf_dir)}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("s11", sf_dir, fresh=True)
     docs = load(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.parquet(
         f"{base}/gen=1"
@@ -181,10 +177,7 @@ def s12_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     billions must neither kill nor disappear). The write half plants
     truncated JSON for every 31st doc; the oracle states the
     expected good/quarantine split relationally."""
-    import shutil
-
-    base = f"{SCRATCH}/s12_{os.path.basename(sf_dir)}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("s12", sf_dir, fresh=True)
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
     # good lines as real JSON; corrupt lines = truncated prefix
     lines = docs.select(
@@ -243,10 +236,7 @@ def s13_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session's parallelism; the oracle proves the data survived
     both hops exactly. Listing overhead, not data size, is what
     kills 100TB readers of uncompacted sinks."""
-    import shutil
-
-    base = f"{SCRATCH}/s13_{os.path.basename(sf_dir)}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("s13", sf_dir, fresh=True)
     frag, compact = f"{base}/frag", f"{base}/compact"
 
     ev = load(spark, sf_dir, "events").select(
@@ -285,7 +275,7 @@ def s14_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining built-in-but-external module (needs the spark-avro jar,
     absent here) — gated out the same way the codec registry gates
     multimodal decode."""
-    path = f"{SCRATCH}/orc_nation_{os.path.basename(sf_dir)}"
+    path = scratch_dir("orc_nation", sf_dir)
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -368,15 +358,12 @@ def s9_rest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     At-least-once semantics documented on rest_sink; the capture
     files are uuid-named so concurrent executor posts never
     collide."""
-    import shutil
-
     from innercircle_etl_spark.sources.rest import (
         ndjson_capture_post,
         rest_sink,
     )
 
-    out = f"{SCRATCH}/rest_sink_{os.path.basename(sf_dir)}"
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir("rest_sink", sf_dir, fresh=True)
     sup = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal"
     )
@@ -424,7 +411,7 @@ def s15_partitioned_db_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mod predicates (`WHERE key %% N = i`) when ids cluster."""
     import duckdb
 
-    db_path = f"{SCRATCH}/ext_{os.path.basename(sf_dir)}.duckdb"
+    db_path = f"{scratch_dir('ext', sf_dir)}.duckdb"
     # driver-side one-time setup of the "external" database
     if os.path.exists(db_path):
         os.remove(db_path)

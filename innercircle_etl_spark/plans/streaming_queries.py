@@ -12,7 +12,6 @@ deterministic.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -23,13 +22,16 @@ from innercircle_etl_spark.operators.atomic_swap import (
     write_replace,
 )
 from innercircle_etl_spark.operators.window_dedup import latest_per_key_agg
-from innercircle_etl_spark.plans.registry import dsum, load, register
+from innercircle_etl_spark.plans.registry import (
+    dsum,
+    load,
+    register,
+    scratch_dir,
+)
 from innercircle_etl_spark.streaming import (
     run_available_now,
     stream_ndjson_dir,
 )
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 _EVENT_SCHEMA = T.StructType(
     [
@@ -96,12 +98,6 @@ def _events_slim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fresh(path: str) -> str:
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
 def _two_wave_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -111,7 +107,7 @@ def _two_wave_stream(
     """Write events as NDJSON in two waves, draining the checkpointed
     stream after each (the daemon's poll loop, two cycles). Returns
     (sink_path, checkpoint) — with foreach_batch, sink is unused."""
-    base = _fresh(f"{SCRATCH}/stream_{name}_{os.path.basename(sf_dir)}")
+    base = scratch_dir(f"stream_{name}", sf_dir, fresh=True)
     src = f"{base}/in"
     sink = f"{base}/out"
     ckpt = f"{base}/ckpt"
@@ -175,7 +171,7 @@ def i3_streaming_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomically rewrites the snapshot. Restart-safe: the checkpoint
     replays unprocessed files only; the merge is idempotent. Oracle =
     latest event per user over the whole table in one batch pass."""
-    base = f"{SCRATCH}/stream_i3_{os.path.basename(sf_dir)}"
+    base = scratch_dir("stream_i3", sf_dir)
     snap = f"{base}/snapshot"
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -230,7 +226,7 @@ def i3b_stateful_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    base = _fresh(f"{SCRATCH}/stream_i3b_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i3b", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     ev = _events_slim(spark, sf_dir)
 
@@ -416,7 +412,7 @@ def i6_watermark_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark), not with stream length — the property that makes
     this run forever at 100TB/day.
     """
-    base = _fresh(f"{SCRATCH}/stream_i6_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i6", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
 
     ev = load(spark, sf_dir, "events").select(
@@ -505,7 +501,7 @@ def i7_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The watermark is what makes this run forever: dedup state is
     bounded by the delivery-delay window, not by stream length —
     the streaming member of the dedup family (cf. dedup_exact)."""
-    base = _fresh(f"{SCRATCH}/stream_i7_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i7", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
 
     ev = load(spark, sf_dir, "events").select(
@@ -619,7 +615,7 @@ def i3c_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    base = _fresh(f"{SCRATCH}/stream_i3c_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i3c", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     ev = _events_slim(spark, sf_dir)
 
@@ -732,7 +728,7 @@ def i9_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     up updates between batches) and broadcast — the stream side
     never shuffles for the join. Two waves through one checkpoint
     prove exactly-once; the oracle is the plain batch join."""
-    base = _fresh(f"{SCRATCH}/stream_i9_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i9", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     ev = _events_slim(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select(
@@ -797,7 +793,7 @@ def i10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     match across the boundary. Inner stream-stream joins emit on
     match — two drains through one checkpoint emit each pair exactly
     once. Oracle = the plain batch interval self-join."""
-    base = _fresh(f"{SCRATCH}/stream_i10_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i10", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", _ts_us("ts").alias("ts_us")
@@ -890,7 +886,7 @@ def i11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched rows. Sentinels (negative user) are filtered from the
     result. Oracle = the plain batch LEFT JOIN with the same
     interval condition."""
-    base = _fresh(f"{SCRATCH}/stream_i11_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i11", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", _ts_us("ts").alias("ts_us")
@@ -1011,7 +1007,7 @@ def i12_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction that emits them. Sentinels (negative user) filtered;
     oracle = the batch gaps-and-islands sessionization — streaming
     and batch answers are IDENTICAL."""
-    base = _fresh(f"{SCRATCH}/stream_i12_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i12", sf_dir, fresh=True)
     src, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     ev = load(spark, sf_dir, "events").select(
         "user_id", "value", _ts_us("ts").alias("ts_us")
@@ -1096,7 +1092,7 @@ def i13_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     newer versions). Final state == batch u12 == its DuckDB oracle,
     proving out-of-order cross-batch delivery converges to the same
     table."""
-    base = _fresh(f"{SCRATCH}/stream_i13_{os.path.basename(sf_dir)}")
+    base = scratch_dir("stream_i13", sf_dir, fresh=True)
     src, ckpt, snap = f"{base}/in", f"{base}/ckpt", f"{base}/snapshot"
 
     cust = load(spark, sf_dir, "customer").select(
@@ -1149,81 +1145,56 @@ def i13_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle as the batch maintenance form (the i13/u12 pattern applied
 # to the index lifecycle)
 from innercircle_etl_spark.plans.similarity_queries import (  # noqa: E402
+    _DEL_ID_ORACLE,
+    _DEL_MOD,
+    _DEL_REM,
+    _INC_BATCH_MOD,
+    _INC_BATCH_REM,
     _INC_UPDATE_ORACLE,
-    _hn_centroids,
-    _hn_frames,
-    _hn_ivf_assign,
+    _CellStore,
+    _FlatStore,
+    _append,
     _index_manifest,
-    _persisted_index,
+    _kill,
 )
 
 
 @register("ann_index_stream_update", oracle=_INC_UPDATE_ORACLE)
 def ann_index_stream_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ann_index_incremental_update's CHECKPOINTED-STREAM analog
-    (round-12 verdict stretch item 8) — the i-series unified with
-    the index lifecycle the way i13 unified it with CDC: day-0's
-    inverted file + codebook are built WITHOUT the arriving rows and
-    persisted; the arrivals then land as parquet files in a watched
-    dir across TWO waves, and a Trigger.AvailableNow foreachBatch
-    drains each wave, assigns ONLY the micro-batch against the
-    LOADED codebook (batch x k broadcast argmax — O(batch), never a
-    corpus pass), and merges into the live index file via the
-    crash-safe atomic swap. The merge is INSERT-IF-ABSENT on vec_id
-    (U1's discipline), so a checkpoint-replayed file re-applies as a
-    no-op — exactly-once state from at-least-once delivery, i4's
-    guarantee extended to index maintenance. Output is the post-drain
-    per-cell manifest from the LOADED merged file; the oracle is the
-    batch form's verbatim: a full single-pass assignment of the
-    whole corpus. Fixed codebook -> per-row argmax independent of
-    arrival order AND batching — stream merge == incremental merge
-    == full rebuild, hash-exactly.
+    """ann_index_incremental_update's CHECKPOINTED-STREAM analog — the
+    i-series unified with the index lifecycle the way i13 unified it
+    with CDC: day-0's inverted file + codebook are built WITHOUT the
+    arriving rows and persisted flat; the arrivals then land as
+    parquet files in a watched dir across TWO waves, and a
+    Trigger.AvailableNow foreachBatch runs each drained micro-batch
+    through the maintenance core's ``_append``. Its insert-if-absent
+    merge makes a checkpoint-replayed file re-apply as a no-op —
+    exactly-once state from at-least-once delivery, i4's guarantee
+    extended to index maintenance
+    (test_ann_index_stream_update_replay_is_noop). Fixed codebook ->
+    per-row argmax independent of arrival order AND batching —
+    stream merge == incremental merge == full rebuild, hash-exactly.
 
     The arriving rows are the batch form's residue class (vec_id %
     10 == 7, deliberately containing codebook ids), split into waves
     by vec_id % 20 (7 vs 17) so each drain carries a nonempty,
-    disjoint slice.
-
-    Scale: the watched dir is the landing zone a 100 TB embedding
-    pipeline already has; each micro-batch costs O(batch) assignment
-    + one index rewrite (cid-partitioned layout -> per-cell appends
-    via overwrite_partitions_atomic; whole-file swap here is the
-    fixture-scale analog, same as the batch form). The insert-if-
-    absent anti-join reads only the index's vec_id column.
+    disjoint slice. The watched dir is the landing zone a 100 TB
+    embedding pipeline already has.
 
     Reference parity: beyond-reference (north-star extension);
     stream harness parity with load_metadata_json_daemon.py:13-37
     (the reference's poll loop, here with checkpointed exactly-once
     instead of its best-effort dedup)."""
-    base = _fresh(f"{SCRATCH}/stream_annidx_{os.path.basename(sf_dir)}")
-    src, ckpt, idx_base = f"{base}/in", f"{base}/ckpt", f"{base}/idx"
-    os.makedirs(src, exist_ok=True)
-
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
-    is_batch = F.col("vec_id") % 10 == 7
-    idx = _persisted_index(
-        spark,
-        idx_base,
-        {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built),
-            "centroids": cent_built,
-        },
-    )
-    cent = idx["centroids"]
-    apath = f"{idx_base}/assign"
+    base = scratch_dir("stream_annidx", sf_dir, fresh=True)
+    src, ckpt = f"{base}/in", f"{base}/ckpt"
+    os.makedirs(src)
+    e, store = _FlatStore.open(spark, sf_dir, f"{base}/idx")
+    store.build(e.filter(F.col("vec_id") % _INC_BATCH_MOD != _INC_BATCH_REM))
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_table(apath)
-        live = batch_df.sparkSession.read.parquet(apath)
-        fresh = _hn_ivf_assign(batch_df, cent).join(
-            live.select("vec_id"), "vec_id", "left_anti"
-        )
-        write_replace(
-            live.unionByName(fresh.select(*live.columns)),
-            apath,
-            f"b{batch_id}",
-        )
+        # the micro-batch's own session reads the live index
+        live = _FlatStore(batch_df.sparkSession, store.table, store.cent)
+        _append(live, batch_df, f"b{batch_id}")
 
     for wave_rem in (7, 17):
         e.filter(F.col("vec_id") % 20 == wave_rem).write.mode(
@@ -1232,77 +1203,26 @@ def ann_index_stream_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = spark.readStream.schema(e.schema).parquet(src)
         run_available_now(stream, ckpt, foreach_batch=apply_batch)
 
-    recover_table(apath)
-    merged = spark.read.parquet(apath)
-    return _index_manifest(merged, spark.read.parquet(f"{idx_base}/centroids"))
+    return _index_manifest(store.live(), store.cent)
 
 
 # ------------- streaming DELETE (kill-list) on the partitioned index
-
-from innercircle_etl_spark.plans.similarity_queries import (  # noqa: E402
-    _DEL_ID_ORACLE,
-    _DEL_MOD,
-    _DEL_REM,
-)
 
 
 def _stream_delete_apply(
     apath: str, cent: DataFrame, batch_df: DataFrame, tag: object
 ) -> None:
-    """One micro-batch of kill-list maintenance on a cell-partitioned
-    index — the module-level helper so the replay test drives the
-    REAL code path: locate each kill's cell O(batch) against the
-    loaded codebook, prune-read only the touched cells, anti-join
-    the kill ids out, swap survivors back at partition grain, drop
-    emptied cells. If the batch's ids are already absent (a
-    checkpoint-replayed file), the survivor count equals the live
-    count and the batch returns WITHOUT swapping — deletion is
-    naturally idempotent, so replay is a TRUE no-op: untouched
-    FILES, not just untouched content."""
-    from innercircle_etl_spark.operators.atomic_swap import (
-        drop_partitions_atomic,
-        overwrite_partitions_atomic,
-        recover_partitions,
-    )
-    from innercircle_etl_spark.plans.similarity_queries import (
-        _hn_ivf_assign,
-    )
-
-    recover_partitions(apath)
-    spark_b = batch_df.sparkSession
-    kill = (
-        _hn_ivf_assign(batch_df, cent)
-        .select("vec_id", F.col("cid").cast("long").alias("cid"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(
-        r.cid for r in kill.select("cid").distinct().collect()
-    )
-    if not touched:
-        return
-    # ONE pruned parquet scan of the touched cells: live is pinned
-    # eagerly and both the survivor derivation and the idempotency
-    # counts read the checkpointed blocks, never the files again
-    # (round-14 review item: live.count() used to re-scan parquet)
-    live = (
-        spark_b.read.parquet(apath)
-        .filter(F.col("cid").isin(touched))
-        .select(
-            "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
-        )
-        .localCheckpoint(eager=True)
-    )
-    survivors = live.join(
-        F.broadcast(kill.select("vec_id")), "vec_id", "left_anti"
-    ).localCheckpoint(eager=True)
-    if survivors.count() == live.count():
-        return  # nothing to kill in this batch — replayed file
-    kept = {r.cid for r in survivors.select("cid").distinct().collect()}
-    if kept:
-        overwrite_partitions_atomic(survivors, apath, "cid", f"sdel{tag}")
-    drop_partitions_atomic(
-        apath, "cid", [c for c in touched if c not in kept]
-    )
+    """One micro-batch of kill-list maintenance on the cell-partitioned
+    index at ``apath``: the maintenance core's kill pipeline, then
+    its apply. Deletion is naturally idempotent; when the batch
+    kills nothing (a checkpoint-replayed file — the survivors are
+    every live row of the touched cells) the apply is skipped, so
+    replay is a TRUE no-op: untouched FILES, not just untouched
+    content."""
+    store = _CellStore(batch_df.sparkSession, apath, cent)
+    survivors, dropped, live = _kill(store, batch_df)
+    if survivors.count() < live.count():
+        store.apply(survivors, dropped, f"sdel{tag}")
 
 
 @register("ann_index_stream_delete", oracle=_DEL_ID_ORACLE)
@@ -1313,49 +1233,27 @@ def ann_index_stream_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches land as parquet files in a watched dir across TWO waves
     (vec_id % 200 == 7, then == 107 — union = the batch delete's
     residue class), and a Trigger.AvailableNow foreachBatch drains
-    each wave through ``_stream_delete_apply``: O(batch) cell
-    location against the LOADED codebook, pruned read of only the
-    touched cells, anti-join, partition-grain swap, emptied-cell
-    drop. Deletion is NATURALLY idempotent (dropping an absent id is
-    a no-op), and the apply detects the already-applied case and
-    skips the swap entirely — so a checkpoint-replayed file leaves
-    the index files BYTE-identical, a stronger replay guarantee than
-    the insert form's content-identity
+    each wave through ``_stream_delete_apply``. A checkpoint-replayed
+    file leaves the index files BYTE-identical, a stronger replay
+    guarantee than the insert form's content-identity
     (test_ann_index_stream_delete_replay_is_noop). Output: the
     post-drain manifest from the LOADED table; oracle: full rebuild
     from the survivors (fixed codebook ⇒ per-row argmax independent
     of deletion order AND batching — stream delete == batch delete
-    == rebuild-from-survivors, hash-exactly).
-
-    Scale: per batch O(kill) assignment + I/O ∝ touched cells; the
-    watched dir is the request queue a 100 TB pipeline already has.
-    Completes the streaming half of the lifecycle: the index can now
-    be appended AND shrunk from checkpointed streams with
-    exactly-once semantics.
+    == rebuild-from-survivors, hash-exactly). The watched dir is the
+    request queue a 100 TB pipeline already has.
 
     Reference parity: beyond-reference (north-star extension);
     batch twin: plans/similarity_queries.py
     ann_index_cellpart_delete."""
-    base = _fresh(f"{SCRATCH}/stream_anndel_{os.path.basename(sf_dir)}")
-    src, ckpt, idx_base = f"{base}/in", f"{base}/ckpt", f"{base}/idx"
-    os.makedirs(src, exist_ok=True)
-
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
-    idx = _persisted_index(
-        spark,
-        idx_base,
-        {
-            "assign": _hn_ivf_assign(e, cent_built),
-            "centroids": cent_built,
-        },
-        partition_by={"assign": "cid"},
-    )
-    cent = idx["centroids"]
-    apath = f"{idx_base}/assign"
+    base = scratch_dir("stream_anndel", sf_dir, fresh=True)
+    src, ckpt = f"{base}/in", f"{base}/ckpt"
+    os.makedirs(src)
+    e, store = _CellStore.open(spark, sf_dir, f"{base}/idx")
+    store.build(e)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _stream_delete_apply(apath, cent, batch_df, batch_id)
+        _stream_delete_apply(store.table, store.cent, batch_df, batch_id)
 
     for wave_rem in (_DEL_REM, _DEL_REM + _DEL_MOD):
         e.filter(
@@ -1364,9 +1262,4 @@ def ann_index_stream_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = spark.readStream.schema(e.schema).parquet(src)
         run_available_now(stream, ckpt, foreach_batch=apply_batch)
 
-    from innercircle_etl_spark.operators.atomic_swap import (
-        recover_partitions,
-    )
-
-    recover_partitions(apath)
-    return _index_manifest(spark.read.parquet(apath), cent)
+    return _index_manifest(store.live(), store.cent)

@@ -21,7 +21,13 @@ from innercircle_etl_spark.operators.upsert import (
     merge_update,
     partition_delete_reload,
 )
-from innercircle_etl_spark.plans.registry import dsum, duck_dsum, load, register
+from innercircle_etl_spark.plans.registry import (
+    dsum,
+    duck_dsum,
+    load,
+    register,
+    scratch_dir,
+)
 
 
 @register(
@@ -208,12 +214,9 @@ def u4_truncate_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     land, so a crash mid-rebuild loses the table; the swap keeps one
     complete copy alive at every crash point — the real TRUNCATE
     discipline at 100TB."""
-    import os
-
     from innercircle_etl_spark.operators.atomic_swap import write_replace
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    path = f"{scratch}/u4_rebuild_{os.path.basename(sf_dir)}"
+    path = scratch_dir("u4_rebuild", sf_dir)
     orders = load(spark, sf_dir, "orders")
 
     # run 1: a stale build (wrong filter) that must be fully replaced
@@ -427,10 +430,7 @@ def u11_dynamic_partition_overwrite(
     ``write_daily_partitioned`` → atomic_swap.
     ``overwrite_partitions_atomic``) closes that window with the
     rename protocol and is what ep1 runs."""
-    import os
-
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    path = f"{scratch}/dyn_overwrite_{os.path.basename(sf_dir)}"
+    path = scratch_dir("dyn_overwrite", sf_dir)
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     ).withColumn("dt", F.to_date("ts"))

@@ -15,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when it holds an integer, else the number
+    of CPUs this process may run on (its scheduler affinity — the
+    host's count, or the container's cpuset)."""
+    try:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "innercircle_etl_spark",
     master: str | None = None,
@@ -23,12 +33,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: the
+    CPUs this process may use, ``local_cpus``).
     On a real cluster, pass ``master=None`` with a cluster manager URL
     in the environment and size ``shuffle_partitions`` ~2-3x total
     cores (or leave AQE to coalesce).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -130,6 +130,8 @@ def test_shuffle_sizing_is_once_per_session_and_validated(spark, monkeypatch):
     """registry._size_shuffle_once must (a) run once per session,
     (b) respect the marker conf, (c) survive a malformed
     SPARK_GRAFT_CPUS without blowing up (round-4 ADVICE)."""
+    import os
+
     from innercircle_etl_spark.plans import registry as R
 
     prev_mark = spark.conf.get(R._SHUFFLE_SIZED_MARK, None)
@@ -141,11 +143,14 @@ def test_shuffle_sizing_is_once_per_session_and_validated(spark, monkeypatch):
         R._size_shuffle_once(spark)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
 
-        # fresh session state + malformed env var -> sane default, no crash
+        # fresh session state + malformed env var -> the CPUs this
+        # process may use, no crash
         spark.conf.unset(R._SHUFFLE_SIZED_MARK)
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "not-a-number")
         R._size_shuffle_once(spark)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            len(os.sched_getaffinity(0))
+        )
 
         # second call is a no-op even if the caller re-sets 200
         spark.conf.set("spark.sql.shuffle.partitions", "200")

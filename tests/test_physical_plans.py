@@ -1112,99 +1112,78 @@ def test_hn_cellpart_prunes_partitions(spark, sf_dir):
     assert leg.count() == per_cell > 0
 
 
-def test_cellpart_update_touches_only_batch_cells(spark, sf_dir):
+def _cell_files(apath: str, cell: str):
+    """(name, inode, mtime, size) of every file in one cell dir — the
+    byte-identity witness of an untouched cell."""
+    import os
+
+    d = os.path.join(apath, cell)
+    return sorted(
+        (f, os.stat(os.path.join(d, f)).st_ino,
+         os.stat(os.path.join(d, f)).st_mtime_ns,
+         os.stat(os.path.join(d, f)).st_size)
+        for f in os.listdir(d)
+    )
+
+
+def test_cellpart_update_touches_only_batch_cells(spark, sf_dir, tmp_path):
     """ann_index_cellpart_update: partition-grain maintenance must
-    be O(touched cells) PHYSICALLY — after the merge, every cell dir
-    the batch did not land in holds byte-identical files (same
-    names, inodes, mtimes, sizes: never rewritten, never renamed),
-    the touched set is a strict subset of the cells, the live
-    touched-cell read is partition-pruned, and the merged table's
-    manifest equals an in-session full rebuild's."""
+    be O(touched cells) PHYSICALLY — after the core's append, every
+    cell dir the batch did not land in holds byte-identical files
+    (same names, inodes, mtimes, sizes: never rewritten, never
+    renamed), the touched set is a strict subset of the cells, the
+    core's touched-cell read is partition-pruned, and the merged
+    table's manifest equals an in-session full rebuild's."""
     import os
 
     from pyspark.sql import functions as F
 
-    from innercircle_etl_spark.operators.atomic_swap import (
-        overwrite_partitions_atomic,
-    )
     from innercircle_etl_spark.plans.similarity_queries import (
         _CELLINC_MOD,
         _CELLINC_REM,
+        _CellStore,
+        _append,
+        _cids,
         _hn_centroids,
-        _hn_frames,
         _hn_ivf_assign,
         _index_manifest,
-        _persisted_index,
     )
 
-    base = "/root/repo/.scratch/test_cellinc_witness"
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e, store = _CellStore.open(spark, sf_dir, str(tmp_path))
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
-    idx = _persisted_index(
-        spark,
-        base,
-        {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built),
-            "centroids": cent_built,
-        },
-        partition_by={"assign": "cid"},
-    )
-    apath = f"{base}/assign"
-
-    def snapshot(cell: str):
-        d = os.path.join(apath, cell)
-        return sorted(
-            (f, os.stat(os.path.join(d, f)).st_ino,
-             os.stat(os.path.join(d, f)).st_mtime_ns,
-             os.stat(os.path.join(d, f)).st_size)
-            for f in os.listdir(d)
-        )
+    store.build(e.filter(~is_batch))
+    apath = store.table
 
     cells = sorted(
         d for d in os.listdir(apath) if d.startswith("cid=")
     )
-    before = {c: snapshot(c) for c in cells}
+    before = {c: _cell_files(apath, c) for c in cells}
 
-    batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
-        .select(
-            "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
-        )
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(
-        r.cid for r in batch_assign.select("cid").distinct().collect()
-    )
+    touched = _cids(_hn_ivf_assign(e.filter(is_batch), store.cent))
     assert 0 < len(touched) < len(cells), (touched, len(cells))
-    live_touched = idx["assign"].filter(F.col("cid").isin(touched)).select(
-        "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
-    )
     # the maintenance read is pruned like the serving read
-    lp = live_touched._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", lp)
-    assert m and "cid" in m.group(1), lp
-    overwrite_partitions_atomic(
-        live_touched.unionByName(batch_assign), apath, "cid", "witness"
-    )
+    lp = store.read_cells(touched)._jdf.queryExecution().executedPlan()
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", lp.toString())
+    assert m and "cid" in m.group(1), lp.toString()
+    _append(store, e.filter(is_batch), "witness")
 
     touched_dirs = {f"cid={c}" for c in touched}
     for c in cells:
         if c in touched_dirs:
-            assert snapshot(c) != before[c], f"{c} should have changed"
+            assert _cell_files(apath, c) != before[c], (
+                f"{c} should have changed"
+            )
         else:
-            assert snapshot(c) == before[c], f"{c} was rewritten"
+            assert _cell_files(apath, c) == before[c], f"{c} was rewritten"
     # no hidden staging/old residue, and the merge equals a rebuild
     assert not [
         d for d in os.listdir(apath) if d.startswith((".staging", ".old"))
     ]
-    merged = spark.read.parquet(apath)
     got = {
         r.cid: (r.n_vectors, r.min_vec_id)
-        for r in _index_manifest(
-            merged, spark.read.parquet(f"{base}/centroids")
-        ).collect()
+        for r in _index_manifest(store.live(), store.cent).collect()
     }
+    cent_built = _hn_centroids(e)
     full = {
         r.cid: (r.n_vectors, r.min_vec_id)
         for r in _index_manifest(
@@ -1215,13 +1194,13 @@ def test_cellpart_update_touches_only_batch_cells(spark, sf_dir):
 
 
 def test_cellpart_compact_defragments_only_fragmented_cells(
-    spark, sf_dir
+    spark, sf_dir, tmp_path
 ):
-    """ann_index_cellpart_compact: the partition-grain append must
-    actually fragment its touched cells (multiple parquet files —
-    otherwise the compaction op witnesses nothing), the compaction
-    must rewrite EVERY fragmented cell to exactly one file while
-    leaving unfragmented cells' files byte-identical, and the
+    """ann_index_cellpart_compact: the core's partition-grain append
+    must actually fragment its touched cells (multiple parquet files
+    — otherwise the compaction op witnesses nothing), the core's
+    compact must rewrite EVERY fragmented cell to exactly one file
+    while leaving unfragmented cells' files byte-identical, and the
     manifest must be unchanged by compaction (layout, never
     content)."""
     import glob
@@ -1229,53 +1208,20 @@ def test_cellpart_compact_defragments_only_fragmented_cells(
 
     from pyspark.sql import functions as F
 
-    from innercircle_etl_spark.operators.atomic_swap import (
-        overwrite_partitions_atomic,
-    )
     from innercircle_etl_spark.plans.similarity_queries import (
         _CELLINC_MOD,
         _CELLINC_REM,
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _CellStore,
+        _append,
+        _compact,
         _index_manifest,
-        _persisted_index,
     )
 
-    from innercircle_etl_spark.plans.similarity_queries import _FIXED_K
-
-    base = "/root/repo/.scratch/test_cellcomp_witness"
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e, store = _CellStore.open(spark, sf_dir, str(tmp_path))
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
-    idx = _persisted_index(
-        spark,
-        base,
-        {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built)
-            .repartition(_FIXED_K, "cid"),
-            "centroids": cent_built,
-        },
-        partition_by={"assign": "cid"},
-    )
-    apath = f"{base}/assign"
-    cast_cols = [
-        "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
-    ]
-    batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
-        .select(*cast_cols)
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(
-        r.cid for r in batch_assign.select("cid").distinct().collect()
-    )
-    live_touched = idx["assign"].filter(
-        F.col("cid").isin(touched)
-    ).select(*cast_cols)
-    overwrite_partitions_atomic(
-        live_touched.unionByName(batch_assign), apath, "cid", "append"
-    )
+    store.build(e.filter(~is_batch), compact=True)
+    apath = store.table
+    _append(store, e.filter(is_batch), "append")
 
     def files(cell_dir):
         return sorted(glob.glob(f"{cell_dir}/*.parquet"))
@@ -1289,19 +1235,11 @@ def test_cellpart_compact_defragments_only_fragmented_cells(
         d: [(f, os.stat(f).st_ino, os.stat(f).st_mtime_ns) for f in files(d)]
         for d in intact
     }
-    cent = spark.read.parquet(f"{base}/centroids")
     manifest_before = sorted(
-        map(tuple, _index_manifest(spark.read.parquet(apath), cent).collect())
+        map(tuple, _index_manifest(store.live(), store.cent).collect())
     )
 
-    frag_cids = [int(os.path.basename(d).split("=", 1)[1]) for d in frag]
-    compact = (
-        spark.read.parquet(apath)
-        .filter(F.col("cid").isin(frag_cids))
-        .select(*cast_cols)
-        .repartition(len(frag_cids), "cid")
-    )
-    overwrite_partitions_atomic(compact, apath, "cid", "compact")
+    _compact(store, "compact")
 
     for d in frag:
         assert len(files(d)) == 1, (d, files(d))
@@ -1310,7 +1248,7 @@ def test_cellpart_compact_defragments_only_fragmented_cells(
             (f, os.stat(f).st_ino, os.stat(f).st_mtime_ns) for f in files(d)
         ], f"{d} was rewritten by compaction"
     manifest_after = sorted(
-        map(tuple, _index_manifest(spark.read.parquet(apath), cent).collect())
+        map(tuple, _index_manifest(store.live(), store.cent).collect())
     )
     assert manifest_after == manifest_before
 
@@ -1654,99 +1592,53 @@ def test_referential_audit_broadcasts_dims(spark, sf_dir):
     assert all(r.n_child > 0 for r in rows), rows
 
 
-def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
-    """ann_index_cellpart_delete: the delete verb must be O(touched
-    cells) PHYSICALLY — cells holding no kill are byte-identical
-    after the delete (names, inodes, mtimes, sizes), the purged
-    cell's dir is GONE (dropped without ever being read), the
-    survivor read is partition-pruned, no hidden residue remains,
-    and the final manifest equals an in-session rebuild from the
-    survivors."""
+def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir, tmp_path):
+    """ann_index_cellpart_delete: the core's delete verb must be
+    O(touched cells) PHYSICALLY — cells holding no kill are
+    byte-identical after the delete (names, inodes, mtimes, sizes),
+    the purged cell's dir is GONE (dropped without ever being read),
+    the core's touched-cell read is partition-pruned, no hidden
+    residue remains, and the final manifest equals an in-session
+    rebuild from the survivors."""
     import os
 
     from pyspark.sql import functions as F
 
-    from innercircle_etl_spark.operators.atomic_swap import (
-        drop_partitions_atomic,
-        overwrite_partitions_atomic,
-    )
     from innercircle_etl_spark.plans.similarity_queries import (
         _DEL_CELL,
         _DEL_MOD,
         _DEL_REM,
+        _CellStore,
+        _cids,
+        _delete,
         _hn_centroids,
-        _hn_frames,
         _hn_ivf_assign,
         _index_manifest,
-        _persisted_index,
     )
 
-    base = "/root/repo/.scratch/test_celldel_witness"
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
-    idx = _persisted_index(
-        spark,
-        base,
-        {
-            "assign": _hn_ivf_assign(e, cent_built),
-            "centroids": cent_built,
-        },
-        partition_by={"assign": "cid"},
-    )
-    apath = f"{base}/assign"
-
-    def snapshot(cell: str):
-        d = os.path.join(apath, cell)
-        return sorted(
-            (f, os.stat(os.path.join(d, f)).st_ino,
-             os.stat(os.path.join(d, f)).st_mtime_ns,
-             os.stat(os.path.join(d, f)).st_size)
-            for f in os.listdir(d)
-        )
+    e, store = _CellStore.open(spark, sf_dir, str(tmp_path))
+    store.build(e)
+    apath = store.table
 
     cells = sorted(d for d in os.listdir(apath) if d.startswith("cid="))
-    before = {c: snapshot(c) for c in cells}
-    rows_before = spark.read.parquet(apath).count()
+    before = {c: _cell_files(apath, c) for c in cells}
+    rows_before = store.live().count()
 
-    kill_assign = (
-        _hn_ivf_assign(
-            e.filter(F.col("vec_id") % _DEL_MOD == _DEL_REM),
-            idx["centroids"],
-        )
-        .select("vec_id", F.col("cid").cast("long").alias("cid"))
-        .localCheckpoint(eager=True)
-    )
-    n_killed_ids = kill_assign.count()
-    id_cells = sorted(
-        r.cid for r in kill_assign.select("cid").distinct().collect()
-    )
+    is_kill = F.col("vec_id") % _DEL_MOD == _DEL_REM
+    kill = e.filter(is_kill)
+    n_killed_ids = kill.count()
+    id_cells = _cids(_hn_ivf_assign(kill, store.cent))
     rewrite_cells = [c for c in id_cells if c != _DEL_CELL]
     assert 0 < len(rewrite_cells) < len(cells) - 1
-    survivors = (
-        idx["assign"]
-        .filter(F.col("cid").isin(rewrite_cells))
-        .select(
-            "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
-        )
-        .join(
-            F.broadcast(kill_assign.select("vec_id")), "vec_id", "left_anti"
-        )
-    )
     # the survivor read is pruned like the serving read
-    sp = survivors._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", sp)
-    assert m and "cid" in m.group(1), sp
-    survivors = survivors.localCheckpoint(eager=True)
-    kept_cells = {
-        r.cid for r in survivors.select("cid").distinct().collect()
-    }
+    sp = store.read_cells(rewrite_cells)._jdf.queryExecution().executedPlan()
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", sp.toString())
+    assert m and "cid" in m.group(1), sp.toString()
+    _delete(store, kill, "witness_del", purge=(_DEL_CELL,))
+    kept_cells = [
+        c for c in rewrite_cells if os.path.isdir(f"{apath}/cid={c}")
+    ]
     assert kept_cells  # fixture cells never empty from the id kill
-    overwrite_partitions_atomic(survivors, apath, "cid", "witness_del")
-    emptied = [c for c in rewrite_cells if c not in kept_cells]
-    drop_partitions_atomic(apath, "cid", [*emptied, _DEL_CELL])
 
     # purged cell: GONE, without its rows ever being read
     assert not os.path.exists(os.path.join(apath, f"cid={_DEL_CELL}"))
@@ -1755,21 +1647,23 @@ def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
         if c == f"cid={_DEL_CELL}":
             continue
         if c in touched_dirs:
-            assert snapshot(c) != before[c], f"{c} should have changed"
+            assert _cell_files(apath, c) != before[c], (
+                f"{c} should have changed"
+            )
         else:
-            assert snapshot(c) == before[c], f"{c} was rewritten"
+            assert _cell_files(apath, c) == before[c], f"{c} was rewritten"
     assert not [
         d
         for d in os.listdir(apath)
         if d.startswith((".staging", ".old", ".drop"))
     ]
 
-    final = spark.read.parquet(apath)
+    final = store.live()
     got = {
         r.cid: (r.n_vectors, r.min_vec_id)
-        for r in _index_manifest(final, idx["centroids"]).collect()
+        for r in _index_manifest(final, store.cent).collect()
     }
-    is_kill = (F.col("vec_id") % _DEL_MOD == _DEL_REM)
+    cent_built = _hn_centroids(e)
     rebuilt = _hn_ivf_assign(e.filter(~is_kill), cent_built).filter(
         F.col("cid") != _DEL_CELL
     )
@@ -1782,107 +1676,56 @@ def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
     assert final.count() < rows_before - n_killed_ids + 1
 
 
-def test_cellpart_delete_composes_with_compaction(spark, sf_dir):
-    """DELETE then COMPACT — the maintenance sequence a long-lived
-    index actually runs (r13 verdict item 2 asked for the
-    composition): the delete's survivor rewrite may fragment its
-    touched cells; the compaction pass must rewrite exactly the
-    fragmented cells to one file each, leave every other cell's
-    files byte-identical, and leave the manifest unchanged — still
-    equal to the rebuild-from-survivors, because compaction changes
-    layout, never content."""
+def test_cellpart_delete_composes_with_compaction(spark, sf_dir, tmp_path):
+    """DELETE then COMPACT on one store — the maintenance sequence a
+    long-lived index actually runs: the delete's survivor rewrite may
+    fragment its touched cells; the core's compact must rewrite
+    exactly the fragmented cells to one file each, leave every other
+    cell's files byte-identical, and leave the manifest unchanged —
+    still equal to the rebuild-from-survivors, because compaction
+    changes layout, never content."""
     import glob as _glob
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
-    from innercircle_etl_spark.operators.atomic_swap import (
-        drop_partitions_atomic,
-        overwrite_partitions_atomic,
-    )
     from innercircle_etl_spark.plans.similarity_queries import (
         _DEL_CELL,
         _DEL_MOD,
         _DEL_REM,
-        _FIXED_K,
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _CellStore,
+        _compact,
         _index_manifest,
-        _persisted_index,
+        _kill,
     )
 
-    base = "/root/repo/.scratch/test_celldel_compact"
-    shutil.rmtree(base, ignore_errors=True)
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
-    cast_cols = [
-        "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
-    ]
     # compact day-0 layout (one file per cell), like the compact query
-    idx = _persisted_index(
-        spark,
-        base,
-        {
-            "assign": _hn_ivf_assign(e, cent_built).repartition(
-                _FIXED_K, "cid"
-            ),
-            "centroids": cent_built,
-        },
-        partition_by={"assign": "cid"},
-    )
-    apath = f"{base}/assign"
+    e, store = _CellStore.open(spark, sf_dir, str(tmp_path))
+    store.build(e, compact=True)
+    apath = store.table
 
-    # the delete (the registered query's exact flow)
-    kill_assign = (
-        _hn_ivf_assign(
-            e.filter(F.col("vec_id") % _DEL_MOD == _DEL_REM),
-            idx["centroids"],
-        )
-        .select("vec_id", F.col("cid").cast("long").alias("cid"))
-        .localCheckpoint(eager=True)
-    )
-    rewrite_cells = [
-        r.cid
-        for r in kill_assign.select("cid").distinct().collect()
-        if r.cid != _DEL_CELL
-    ]
-    survivors = (
-        idx["assign"]
-        .filter(F.col("cid").isin(rewrite_cells))
-        .select(*cast_cols)
-        .join(
-            F.broadcast(kill_assign.select("vec_id")), "vec_id", "left_anti"
-        )
-        .localCheckpoint(eager=True)
-    )
-    # write the survivor rewrite through MANY tasks (round-robin
+    # the delete: the core's kill pipeline and apply, with the
+    # survivor rewrite written through MANY tasks (round-robin
     # repartition) so each touched cell lands as several files — the
-    # layout a parallel production rewrite produces; at fixture
-    # scale a single task per cell would write one file and leave
-    # the compaction with nothing to witness
-    overwrite_partitions_atomic(
-        survivors.repartition(8), apath, "cid", "del"
+    # layout a parallel production rewrite of a large cell produces;
+    # at fixture scale one single-file cell is one read split, so a
+    # plain delete writes one file per cell and leaves the compaction
+    # with nothing to witness
+    survivors, dropped, _ = _kill(
+        store,
+        e.filter(F.col("vec_id") % _DEL_MOD == _DEL_REM),
+        purge=(_DEL_CELL,),
     )
-    drop_partitions_atomic(apath, "cid", [_DEL_CELL])
+    store.apply(survivors.repartition(8), dropped, "del")
 
     def manifest():
         return {
             r.cid: (r.n_vectors, r.min_vec_id, round(r.avg_cos, 9))
-            for r in _index_manifest(
-                spark.read.parquet(apath),
-                spark.read.parquet(f"{base}/centroids"),
-            ).collect()
+            for r in _index_manifest(store.live(), store.cent).collect()
         }
 
     def snapshot(cell):
-        d = os.path.join(apath, cell)
-        return sorted(
-            (f, os.stat(os.path.join(d, f)).st_ino,
-             os.stat(os.path.join(d, f)).st_mtime_ns)
-            for f in os.listdir(d)
-        )
+        return [f[:3] for f in _cell_files(apath, cell)]
 
     before_manifest = manifest()
     frag = sorted(
@@ -1898,14 +1741,7 @@ def test_cellpart_delete_composes_with_compaction(spark, sf_dir):
     ]
     before_files = {c: snapshot(c) for c in unfrag_dirs}
 
-    # the compaction (the compact query's exact flow)
-    compact = (
-        spark.read.parquet(apath)
-        .filter(F.col("cid").isin(frag))
-        .select(*cast_cols)
-        .repartition(len(frag), "cid")
-    )
-    overwrite_partitions_atomic(compact, apath, "cid", "compact")
+    _compact(store, "compact")
 
     for c in frag:
         files = _glob.glob(f"{apath}/cid={c}/*.parquet")
@@ -1914,6 +1750,73 @@ def test_cellpart_delete_composes_with_compaction(spark, sf_dir):
         assert snapshot(c) == before_files[c], f"{c} was rewritten"
     assert manifest() == before_manifest
     assert _DEL_CELL not in before_manifest
+
+
+_KEEP_ALL = "TRUE"
+_KEEP_ID = "NOT (vec_id % 100 = 7)"  # the residue-class kill-list
+_KEEP_ID_CELL = f"{_KEEP_ID} AND cid != 13"  # plus the cell purge
+
+
+_MAINTAINED = [  # (builder, index dir, versioned?, surviving rows)
+    ("ann_index_incremental_update", "hn_ivf_inc", False, _KEEP_ALL),
+    ("ann_index_cellpart_update", "hn_ivf_cellinc", False, _KEEP_ALL),
+    ("ann_index_versioned_update", "hn_ivf_versioned", True, _KEEP_ALL),
+    (
+        "ann_index_versioned_cellpart_update",
+        "hn_ivf_vcellpart",
+        True,
+        _KEEP_ALL,
+    ),
+    ("ann_index_cellpart_compact", "hn_ivf_cellcomp", False, _KEEP_ALL),
+    ("ann_index_cellpart_delete", "hn_ivf_celldel", False, _KEEP_ID_CELL),
+    ("ann_index_versioned_delete", "hn_ivf_vdel", True, _KEEP_ID_CELL),
+    ("ann_index_versioned_compact", "hn_ivf_vcomp", True, _KEEP_ALL),
+    ("ann_index_stream_update", "stream_annidx/idx", False, _KEEP_ALL),
+    ("ann_index_stream_delete", "stream_anndel/idx", False, _KEEP_ID),
+]
+
+
+@pytest.mark.parametrize(
+    "name,index_dir,versioned,survives",
+    _MAINTAINED,
+    ids=[m[0] for m in _MAINTAINED],
+)
+def test_maintained_index_rows_equal_rebuild(
+    spark, sf_dir, name, index_dir, versioned, survives
+):
+    """Every index-maintenance builder leaves behind an index table
+    equal, row for row on (vec_id, label, v, cid), to the full
+    single-pass rebuild of its surviving rows. The registered oracle
+    is the per-cell manifest (cid, n_vectors, min_vec_id, avg_cos),
+    which never reads ``label`` — a maintenance step that corrupted
+    labels, or swapped payloads between rows of one cell, would pass
+    it; this compares the stored rows themselves."""
+    from innercircle_etl_spark.operators.versioned_table import read_current
+    from innercircle_etl_spark.plans.registry import scratch_dir
+    from innercircle_etl_spark.plans.similarity_queries import (
+        _hn_centroids,
+        _hn_frames,
+        _hn_ivf_assign,
+    )
+
+    QUERIES[name](spark, sf_dir).collect()
+    top, _, sub = index_dir.partition("/")
+    table = "/".join(filter(None, [scratch_dir(top, sf_dir), sub, "assign"]))
+    stored = read_current(spark, table) if versioned else (
+        spark.read.parquet(table)
+    )
+    e, _ = _hn_frames(spark, sf_dir)
+    rebuilt = _hn_ivf_assign(e, _hn_centroids(e)).filter(survives)
+
+    def rows(df):
+        return sorted(
+            (r.vec_id, r.label, tuple(r.v), int(r.cid))
+            for r in df.select("vec_id", "label", "v", "cid").collect()
+        )
+
+    got, want = rows(stored), rows(rebuilt)
+    assert len(got) == len(want) > 0
+    assert got == want
 
 
 def test_versioned_cellpart_serving_prunes_at_the_scan(spark, sf_dir):

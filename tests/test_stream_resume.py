@@ -65,42 +65,37 @@ def test_three_wave_resume_no_reprocessing(spark):
 def test_ann_index_stream_update_replay_is_noop(spark, sf_dir):
     """ann_index_stream_update: the merge must be IDEMPOTENT (insert-
     if-absent on vec_id), because a crashed drain replays its files —
-    re-applying an already-applied wave through the same merge logic
-    must leave the index file row-identical; and an extra drain with
-    no new arrivals must leave the manifest unchanged (checkpoint
-    exactly-once, i4's property on the index lifecycle)."""
+    re-applying an already-applied wave through the maintenance
+    core's append must leave the index file row-identical; and an
+    extra drain with no new arrivals must leave the manifest
+    unchanged (checkpoint exactly-once, i4's property on the index
+    lifecycle)."""
     from pyspark.sql import functions as F
 
-    from innercircle_etl_spark.operators.atomic_swap import write_replace
     from innercircle_etl_spark.plans import QUERIES
+    from innercircle_etl_spark.plans.registry import scratch_dir
     from innercircle_etl_spark.plans.similarity_queries import (
+        _FlatStore,
+        _append,
         _hn_frames,
-        _hn_ivf_assign,
         _index_manifest,
     )
-    from innercircle_etl_spark.plans.streaming_queries import SCRATCH
 
     manifest = {
         r.cid: (r.n_vectors, r.min_vec_id, r.avg_cos)
         for r in QUERIES["ann_index_stream_update"](spark, sf_dir).collect()
     }
-    base = f"{SCRATCH}/stream_annidx_{os.path.basename(sf_dir)}"
-    apath = f"{base}/idx/assign"
+    base = scratch_dir("stream_annidx", sf_dir)
     cent = spark.read.parquet(f"{base}/idx/centroids")
-    before = spark.read.parquet(apath).count()
+    store = _FlatStore(spark, f"{base}/idx/assign", cent)
+    before = store.live().count()
 
-    # replay: re-merge wave 0 (already applied) with the query's own
-    # insert-if-absent discipline -> row count unchanged
+    # replay: re-merge wave 0 (already applied) through the query's
+    # own append -> row count unchanged
     e, _ = _hn_frames(spark, sf_dir)
     wave0 = e.filter(F.col("vec_id") % 20 == 7)
-    live = spark.read.parquet(apath)
-    fresh = _hn_ivf_assign(wave0, cent).join(
-        live.select("vec_id"), "vec_id", "left_anti"
-    )
-    write_replace(
-        live.unionByName(fresh.select(*live.columns)), apath, "replay"
-    )
-    after = spark.read.parquet(apath)
+    _append(store, wave0, "replay")
+    after = store.live()
     assert after.count() == before
     re_manifest = {
         r.cid: (r.n_vectors, r.min_vec_id, r.avg_cos)
@@ -127,8 +122,8 @@ def test_ann_index_stream_delete_replay_is_noop(spark, sf_dir):
         _hn_frames,
         _index_manifest,
     )
+    from innercircle_etl_spark.plans.registry import scratch_dir
     from innercircle_etl_spark.plans.streaming_queries import (
-        SCRATCH,
         _stream_delete_apply,
     )
 
@@ -136,7 +131,7 @@ def test_ann_index_stream_delete_replay_is_noop(spark, sf_dir):
         r.cid: (r.n_vectors, r.min_vec_id, r.avg_cos)
         for r in QUERIES["ann_index_stream_delete"](spark, sf_dir).collect()
     }
-    base = f"{SCRATCH}/stream_anndel_{os.path.basename(sf_dir)}"
+    base = scratch_dir("stream_anndel", sf_dir)
     apath = f"{base}/idx/assign"
     cent = spark.read.parquet(f"{base}/idx/centroids")
 

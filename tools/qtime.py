@@ -12,6 +12,13 @@ wall, jobs, stages, summed task time (``task_s``), ``slot_util``
 (``shuffle_mb``). Reps via $SPARK_GRAFT_QTIME_REPS (default 3), sf
 dir via $SPARK_GRAFT_SF_DIR (default sf0.1). Prints one JSON line;
 one line per rep on stderr.
+
+The session is ``session.get_spark``'s: ``local[N]`` with N from
+$SPARK_GRAFT_CPUS, else the CPUs this process may use. Its driver
+heap defaults to 90g, so set $SPARK_DRIVER_MEM to fit the host (e.g.
+``SPARK_DRIVER_MEM=4g`` on a 15 GB machine); a heap larger than the
+host's free memory lets the JVM die mid-run ("Answer from Java side
+is empty").
 """
 
 from __future__ import annotations
