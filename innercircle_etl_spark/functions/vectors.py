@@ -43,6 +43,18 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# The DuckDB spelling of ``cosine`` for oracle SQL: the same
+# left-to-right folds through ``list_reduce``, so the two engines'
+# cosines are bit-identical. Format with ``a`` and ``b``, the two
+# list expressions.
+COS_SQL = """
+    list_reduce(list_transform(generate_series(1, len({a})),
+                               i -> {a}[i] * {b}[i]), (x, y) -> x + y)
+    / (sqrt(list_reduce(list_transform({a}, x -> x*x), (x,y) -> x+y))
+       * sqrt(list_reduce(list_transform({b}, x -> x*x), (x,y) -> x+y)))
+"""
+
+
 def scale(a: Column, factor: float) -> Column:
     return F.transform(a, lambda x: x * F.lit(factor))
 

@@ -16,6 +16,27 @@ duplication. Since round 5 the moduli, the id offset, the DuckDB
 CTE bodies, AND the DataFrame transforms all live in ONE module
 (``planting.py``) — both language sides format from the same
 constants, so they cannot drift.
+
+Candidate generation and verification are separate stages shared
+across the rows (the split of *Continuously Adaptive Similarity
+Search*, SIGMOD 2020): each row is plant → core(s) → its own metric.
+
+- MinHash: ``minhash_prep`` (shingles + md5 halves, pinned by the
+  caller), ``_band_keys`` (LSH band keys) and ``_shingle_pairs`` (the
+  candidate pairs with both docs' shingles) serve dedup_minhash_lsh,
+  dedup_minhash_recall, dedup_cluster_canonical,
+  dedup_shingle_containment, dedup_incremental_minhash and ep11; the
+  oracles share ``_minhash_ctes`` (corpus → … → cand → pairs) and
+  ``_JAC_SQL``.
+- Cosine: ``_cos_side`` + ``_cos_verified`` (norm in the pin, one dot
+  per pair) serve dedup_embedding_cosine, both multiprobe rows and
+  decon_semantic_embeddings; their oracles share ``V.COS_SQL``.
+- Margin multiprobe: ``_margin_keyed`` + ``_margin_probes``.
+- Ingest: ``_ingest_split`` / ``_ingest_sql`` (even docs are the
+  index, the batch is the odd docs plus planted copies) and
+  ``_bloom_probe`` (the Bloom position set and the batch's two
+  probes) serve dedup_incremental_minhash, dedup_bloom_incremental
+  and ep11.
 """
 
 from __future__ import annotations
@@ -25,22 +46,26 @@ from pyspark.sql import functions as F
 
 from innercircle_etl_spark.functions import sketches as SK
 from innercircle_etl_spark.functions import vectors as V
+from innercircle_etl_spark.functions.vectors import COS_SQL
 from innercircle_etl_spark.plans.planting import (
     DOC_EXACT_CORPUS_SQL,
     DOC_EXACT_MOD,
     DOC_NEAR_CORPUS_SQL,
     DOC_NEAR_MOD,
     PLANT_ID_OFFSET,
+    VEC_PERTURB_EPS,
     VEC_SCALE_CORPUS_SQL,
     VEC_SCALE_MOD,
+    perturbed_vectors,
+    perturbed_vectors_sql,
     plant_exact_docs,
     plant_near_docs,
     plant_scaled_vectors,
 )
 from innercircle_etl_spark.plans.registry import (
+    _pin_rdd,
     load,
     pin_concurrently,
-    pinned_rdd_ids,
     register,
     release_pins,
 )
@@ -91,96 +116,122 @@ _band_list = ", ".join(
     for b in range(_BANDS)
 )
 
-# Shared candidate-generation CTE chain: corpus → shingles → MinHash
-# signatures → LSH band keys → colliding pairs. The Jaccard query
-# and the containment query put different verifiers on top of the
-# SAME candidates (in SQL here, and in Spark via
-# ``minhash_shingle_candidates`` below).
-_MINHASH_CAND_CTES = f"""corpus AS ({DOC_NEAR_CORPUS_SQL}
+# shingle-set Jaccard of two list expressions (the Spark verify's
+# int/int double division, so the value is bit-identical)
+_JAC_SQL = (
+    "CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+    " / len(list_distinct(list_concat({a}, {b})))"
+)
+
+
+def _minhash_ctes(corpus: str = "", batch: str = "") -> str:
+    """The oracle twin of the Spark MinHash core: the WITH-list
+    corpus → tok → sh → hh → sig → bands → cand → pairs, where
+    ``pairs`` is every distinct band-colliding pair with both docs'
+    shingle lists ``sa``/``sb``. Symmetric over ``corpus``, a (doc_id,
+    text) SELECT: pairs (doc_a, doc_b) with doc_a < doc_b. Given
+    ``batch``, the name of a (doc_id, text) relation: its docs (side
+    1) against those of the CTE idx (side 0), pairs (new_doc,
+    canon_doc)."""
+    k, ida, idb, on = "", "doc_a", "doc_b", "a.doc_id < b.doc_id"
+    sa_on = sb_on = ""
+    if batch:
+        corpus = f"""
+    SELECT 0 AS side, doc_id, text FROM idx
+    UNION ALL
+    SELECT 1, doc_id, text FROM {batch}"""
+        k, ida, idb = "side, ", "new_doc", "canon_doc"
+        on = "a.side = 1 AND b.side = 0"
+        sa_on, sb_on = " AND sa.side = 1", " AND sb.side = 0"
+    return f"""corpus AS ({corpus}
 ),
-tok AS (
-    SELECT doc_id, string_split(text, ' ') AS w FROM corpus
-),
+tok AS (SELECT {k}doc_id, string_split(text, ' ') AS w FROM corpus),
 sh AS (
-    SELECT doc_id,
+    SELECT {k}doc_id,
            list_distinct([array_to_string(w[i:i+2], ' ')
                           for i in generate_series(1, len(w) - 2)]) AS sh
     FROM tok WHERE len(w) >= 3
 ),
-hashed AS (
-    SELECT doc_id, sh, [md5(x) for x in sh] AS mh FROM sh
-),
 hh AS (
-    SELECT doc_id, sh,
-           [('0x' || substr(m, 1, 8))::BIGINT for m in mh] AS h1,
-           [('0x' || substr(m, 9, 8))::BIGINT for m in mh] AS h2
-    FROM hashed
+    SELECT {k}doc_id,
+           [('0x' || substr(m, 1, 8))::BIGINT for m in mm] AS h1,
+           [('0x' || substr(m, 9, 8))::BIGINT for m in mm] AS h2
+    FROM (SELECT {k}doc_id, [md5(x) for x in sh] AS mm FROM sh)
 ),
-sig AS (
-    SELECT doc_id, sh, [{_mh_list}] AS m FROM hh
-),
-bands AS (
-    SELECT doc_id, sh, unnest([{_band_list}]) AS band_key FROM sig
-),
+sig AS (SELECT {k}doc_id, [{_mh_list}] AS m FROM hh),
+bands AS (SELECT {k}doc_id, unnest([{_band_list}]) AS band_key FROM sig),
 cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band_key = b.band_key AND a.doc_id < b.doc_id
+    SELECT DISTINCT a.doc_id AS {ida}, b.doc_id AS {idb}
+    FROM bands a JOIN bands b ON a.band_key = b.band_key AND {on}
+),
+pairs AS (
+    SELECT c.{ida}, c.{idb}, sa.sh AS sa, sb.sh AS sb
+    FROM cand c
+    JOIN sh sa ON c.{ida} = sa.doc_id{sa_on}
+    JOIN sh sb ON c.{idb} = sb.doc_id{sb_on}
 )"""
+
+
+_MINHASH_CAND_CTES = _minhash_ctes(DOC_NEAR_CORPUS_SQL)
+_JAC = _JAC_SQL.format(a="sa", b="sb")
 
 _MINHASH_ORACLE = f"""
 WITH {_MINHASH_CAND_CTES}
-SELECT c.doc_a, c.doc_b,
-       CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / len(list_distinct(list_concat(sa.sh, sb.sh))) AS jaccard
-FROM cand c
-JOIN sh sa ON c.doc_a = sa.doc_id
-JOIN sh sb ON c.doc_b = sb.doc_id
-WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / len(list_distinct(list_concat(sa.sh, sb.sh))) >= 0.8
+SELECT doc_a, doc_b, {_JAC} AS jaccard
+FROM pairs WHERE {_JAC} >= 0.8
 """
+
+
+def minhash_prep(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """The MinHash prep core: (doc_id, sh, h1, h2) for the docs of a
+    (doc_id, text) frame with >= 3 tokens — 3-word shingles and the
+    two md5 halves every signature hash derives from.
+
+    UNPINNED: the caller pins it, always — each prepped side feeds
+    banding AND its verify join, and the materialization boundary
+    stops ProjectCollapse from inlining h1/h2 into all 16 signature
+    expressions (higher-order funcs are interpreted — no CSE — so
+    inlining would run the md5 pass 32x per row). A localCheckpoint
+    over cache+count: pinned blocks, no eviction-triggered recompute
+    (the round-4 variance lesson). Leaving the pin to the caller lets
+    independent sides pin as concurrent jobs (guide §2.6).
+
+    The token-count filter runs BEFORE the shingle arrays are built:
+    filtering on size(sh) makes Catalyst inline the whole shingle
+    expression into the pushed-down predicate and evaluate it twice
+    per row. The repartition spreads the hash-heavy compute across
+    all cores (tiny parquet => 1-2 input splits; at 100TB the scan
+    already yields thousands of splits and the shuffle is skipped)."""
+    corpus = df.filter(
+        F.size(F.split(F.col("text"), " ")) >= 3
+    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    toks = F.split(F.col("text"), " ")
+    sh = corpus.select("doc_id", SK.word_shingles(toks, 3).alias("sh"))
+    h1, h2 = SK.shingle_hashes(F.col("sh"))
+    return sh.select("doc_id", "sh", h1.alias("h1"), h2.alias("h2"))
+
+
+def _band_keys(prepped: DataFrame) -> DataFrame:
+    """(doc_id, band_key): the 4 LSH band keys of each doc's 16
+    MinHashes, one row per band, from a pinned ``minhash_prep``."""
+    sigs = SK.minhash_from_hashes(F.col("h1"), F.col("h2"), _NUM_HASHES)
+    return prepped.select(
+        "doc_id", F.explode(SK.lsh_band_keys(sigs, _BANDS)).alias("band_key")
+    )
 
 
 def minhash_shingle_candidates(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared candidate generator: returns (hashed, cand) where
-    ``hashed`` is the per-doc shingle table (doc_id, sh, h1, h2) —
-    cached, since banding and both verify sides consume it — and
-    ``cand`` is the distinct LSH band-collision pair set. The
-    Spark-side twin of ``_MINHASH_CAND_CTES``."""
+    """The symmetric candidate stage over the planted near-dup
+    corpus: returns (hashed, cand), the pinned ``minhash_prep`` of the
+    corpus and the distinct band-collision pairs (doc_a < doc_b). The
+    Spark twin of ``_minhash_ctes(DOC_NEAR_CORPUS_SQL)``."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # Filter on a cheap token-count proxy BEFORE building shingle
-    # arrays: filtering on size(sh) makes Catalyst inline the whole
-    # shingle expression into the pushed-down predicate and evaluate
-    # it twice per row.
-    corpus = (
-        plant_near_docs(docs)
-        .filter(F.size(F.split(F.col("text"), " ")) >= 3)
-        # tiny parquet => 1-2 input splits; spread the hash-heavy
-        # compute across all cores. At 100TB the scan already yields
-        # thousands of splits and this shuffle is skipped.
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    hashed = minhash_prep(spark, plant_near_docs(docs)).localCheckpoint(
+        eager=True
     )
-
-    toks = F.split(F.col("text"), " ")
-    sh = corpus.select("doc_id", SK.word_shingles(toks, 3).alias("sh"))
-    h1, h2 = SK.shingle_hashes(F.col("sh"))
-    # Eager localCheckpoint HERE, after the md5/hash projection: it
-    # feeds candidate generation AND both sides of the verify join,
-    # and the materialization boundary stops ProjectCollapse from
-    # inlining h1/h2 into all 16 signature expressions (higher-order
-    # funcs are interpreted — no CSE — so inlining would run the md5
-    # pass 32x per row). Checkpoint over cache+count: pinned blocks,
-    # no eviction-triggered recompute (the round-4 variance lesson).
-    hashed = sh.select(
-        "doc_id", "sh", h1.alias("h1"), h2.alias("h2")
-    ).localCheckpoint(eager=True)
-    sigs = SK.minhash_from_hashes(F.col("h1"), F.col("h2"), _NUM_HASHES)
-    banded = hashed.select(
-        "doc_id",
-        F.explode(SK.lsh_band_keys(sigs, _BANDS)).alias("band_key"),
-    )
+    banded = _band_keys(hashed)
     a = banded.select(
         F.col("doc_id").alias("doc_a"), F.col("band_key").alias("k")
     )
@@ -191,8 +242,8 @@ def minhash_shingle_candidates(
         a.join(b, (a.k == b.k) & (a.doc_a < b.doc_b))
         .select("doc_a", "doc_b")
         .distinct()
-        # Eager pin (round-8, the simhash precedent): BOTH verifiers
-        # broadcast cand twice — once as the pair table, once as its
+        # Eager pin (round-8, the simhash precedent): the verify
+        # broadcasts cand twice — once as the pair table, once as its
         # distinct-doc_b semi filter — and an unpinned cand re-runs
         # the band self-join + distinct per broadcast build. The two
         # builds also RACE under a contended block manager (the
@@ -203,6 +254,45 @@ def minhash_shingle_candidates(
         .localCheckpoint(eager=True)
     )
     return hashed, cand
+
+
+def _shingle_pairs(
+    ha: DataFrame, hb: DataFrame, cand: DataFrame, ida: str, idb: str
+) -> DataFrame:
+    """The MinHash verify core: the candidate pairs ``cand`` (ida,
+    idb) with the shingle arrays ``sh_a`` (from the pinned side ``ha``)
+    and ``sh_b`` (from ``hb``); each caller adds its metric.
+
+    Broadcast direction matters: cand is |near-dups|-sized (hundreds),
+    the shingle tables are corpus-sized (tens of MB here, TBs at
+    scale) — so only the CANDIDATE IDS broadcast into the shingle
+    scans, never shingle payloads. The A side picks up its partner id
+    via the broadcast cand join, the B side semi-filters to candidate
+    docs, and the two candidate-bounded payload streams meet in ONE
+    shuffle join on idb (the round-6 containment fix — an earlier
+    form broadcast sh_a-carrying rows, a corpus-content broadcast
+    that cannot survive 100TB)."""
+    sa = ha.select(F.col("doc_id").alias(ida), F.col("sh").alias("sh_a"))
+    sb = hb.select(F.col("doc_id").alias(idb), F.col("sh").alias("sh_b"))
+    with_a = sa.join(F.broadcast(cand), ida)
+    sb_cand = sb.join(F.broadcast(cand.select(idb).distinct()), idb, "semi")
+    return sb_cand.join(with_a, idb)
+
+
+def _jaccard_pairs(
+    ha: DataFrame, hb: DataFrame, cand: DataFrame, ida: str, idb: str
+) -> DataFrame:
+    """(ida, idb, jaccard) for the candidate pairs whose exact
+    shingle Jaccard is >= 0.8."""
+    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return (
+        _shingle_pairs(ha, hb, cand, ida, idb)
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= 0.8)
+        .select(ida, idb, "jaccard")
+    )
 
 
 @register("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
@@ -218,34 +308,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ngram_jaccard (exact verify) — same verify step, different
     candidate generation."""
     hashed, cand = minhash_shingle_candidates(spark, sf_dir)
-    sa = hashed.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-    )
-    sb = hashed.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    # Broadcast direction matters: cand is |near-dups|-sized (hundreds),
-    # the shingle table is corpus-sized (tens of MB here, TBs at scale)
-    # — so only the CANDIDATE IDS broadcast into the shingle scans,
-    # never shingle payloads. The A side picks up its partner id via
-    # the broadcast cand join, the B side semi-filters to candidate
-    # docs, and the two candidate-bounded payload streams meet in ONE
-    # shuffle join on doc_b (same discipline as the round-6
-    # containment fix — the earlier form broadcast sh_a-carrying
-    # rows, a corpus-content broadcast that cannot survive 100TB).
-    withA = sa.join(F.broadcast(cand), "doc_a")
-    sb_cand = sb.join(
-        F.broadcast(cand.select("doc_b").distinct()), "doc_b", "semi"
-    )
-    return (
-        sb_cand.join(withA, "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.8)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_pairs(hashed, hashed, cand, "doc_a", "doc_b")
 
 
 # -------------------------------------------------------------- simhash
@@ -377,8 +440,6 @@ WHERE CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) >= 0.9
 
 
 _NGRAM_ORACLE = _ngram_oracle(3)
-
-_NGRAM_T = 0.9
 
 # Verify-representation switch: bitset popcount while the per-doc
 # packed bitset (vocab/64 longs) stays under this, sorted rank-array
@@ -807,27 +868,54 @@ def dedup_ngram_jaccard_w7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------- embedding cosine
 
-_EMB_ORACLE = f"""
-WITH corpus AS ({VEC_SCALE_CORPUS_SQL}
+def _cos_pairs_oracle(corpus: str) -> str:
+    """All-pairs cosine >= 0.99 over ``corpus`` (vec_id, v): the
+    independent scan the symmetric embedding near-dup rows check
+    against."""
+    return f"""
+WITH corpus AS ({corpus}
 ),
 pairs AS (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           list_reduce(list_transform(generate_series(1, len(a.v)),
-                                      i -> a.v[i] * b.v[i]),
-                       (x, y) -> x + y)
-           / (sqrt(list_reduce(list_transform(a.v, x -> x*x), (x,y) -> x+y))
-              * sqrt(list_reduce(list_transform(b.v, x -> x*x), (x,y) -> x+y)))
-             AS cos
+           {COS_SQL.format(a="a.v", b="b.v")} AS cos
     FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
 )
 SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.99
 """
 
 
+_EMB_ORACLE = _cos_pairs_oracle(VEC_SCALE_CORPUS_SQL)
+
+
 # 16 planes → 65536 buckets: per-bucket population is n/65536, so the
 # within-bucket pair join is quadratic only in tiny groups.
 _EMB_PLANES = 16
 _EMB_DIM = 64
+
+
+def _cos_side(vecs: DataFrame, id_col: str, s: str, *keys: str) -> DataFrame:
+    """One side ``s`` ("a" or "b") of the cosine verify: (keys…,
+    id_col, v<s>, n<s>) from a pinned (vec_id, v, nv) frame. The norm
+    ``nv`` is folded once per vector when the frame is pinned, so the
+    verify pays one dot per pair instead of refolding both sides'
+    norms per pair (guide §2.2)."""
+    return vecs.select(
+        *keys,
+        F.col("vec_id").alias(id_col),
+        F.col("v").alias("v" + s),
+        F.col("nv").alias("n" + s),
+    )
+
+
+def _cos_verified(pairs: DataFrame, ida: str, idb: str) -> DataFrame:
+    """The cosine verify core: (ida, idb, cos) for the rows of a join
+    of an "a" and a "b" ``_cos_side`` whose cosine is >= 0.99. The
+    per-pair expression tree dot / (na * nb) is ``V.cosine``'s, so cos
+    is bit-identical to the oracles' ``COS_SQL`` left folds."""
+    cos = V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    return pairs.select(ida, idb, cos.alias("cos")).filter(
+        F.col("cos") >= 0.99
+    )
 
 
 @register("dedup_embedding_cosine", oracle=_EMB_ORACLE)
@@ -848,8 +936,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
        variant (``dedup_embedding_multiprobe`` below) drops the
        scalar-copy assumption with a derived per-plane probe margin;
        the plan shape is unchanged.
-    2. Exact verify: left-fold cosine (bit-identical to the oracle's
-       list_reduce) on same-bucket pairs only, filter ≥ 0.99.
+    2. Exact verify (``_cos_verified``) on same-bucket pairs only.
 
     Scale shape: one shuffle of (id, vec, bucket) per side on the
     bucket key; within-bucket self-join touches ~n²/2^16 pairs total.
@@ -862,42 +949,20 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus and the 16-plane projection is the expensive expression
     # — compute once, pinned (cache+count left the blocks evictable;
     # the round-4 ngram lesson).
-    # The norm rides in the pin: folded once per vector at checkpoint
-    # time, so the within-bucket verify join pays one dot per pair
-    # instead of refolding both sides' norms per pair (guide §2.2).
-    # Same per-pair expression tree → cos stays bit-identical.
     bkt = (
         corpus.withColumn("bucket", V.sign_bucket(F.col("v"), planes))
         .withColumn("nv", V.norm(F.col("v")))
         .localCheckpoint(eager=True)
     )
-    a = bkt.select(
-        "bucket",
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
+    pairs = _cos_side(bkt, "vec_a", "a", "bucket").join(
+        _cos_side(bkt, "vec_b", "b", "bucket"), "bucket"
     )
-    b = bkt.select(
-        "bucket",
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    cand = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
-    cos = V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.select("vec_a", "vec_b", cos.alias("cos"))
-        .filter(F.col("cos") >= 0.99)
+    return _cos_verified(
+        pairs.filter(F.col("vec_a") < F.col("vec_b")), "vec_a", "vec_b"
     )
 
 
 # --------------------------- embedding cosine, margin multiprobe form
-
-# Perturbation step for the planted NON-scalar near-dups: two chosen
-# coordinates shift by ±_EMB_EPS. Small vs the ~1.7 vector norm, so
-# planted cosine stays >= 0.999, but projections near a hyperplane
-# CAN change sign — exactly the case plain sign-bucketing misses.
-_EMB_EPS = 0.05
 
 
 def _emb_margins(planes: list[list[int]]) -> list[float]:
@@ -908,67 +973,20 @@ def _emb_margins(planes: list[list[int]]) -> list[float]:
     never flip under the perturbation, so enumerating only the
     sub-margin ("uncertain") planes is LOSSLESS by construction —
     no fixture luck involved."""
-    return [2.0 * _EMB_EPS * max(abs(x) for x in w) for w in planes]
+    return [2.0 * VEC_PERTURB_EPS * max(abs(x) for x in w) for w in planes]
 
 
-_EMB_MP_ORACLE = """
-WITH orig AS (
+_EMB_MP_ORACLE = _cos_pairs_oracle(f"""
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
     FROM embeddings
-),
-corpus AS (
-    -- oid keeps the ORIGINAL id visible: DuckDB lateral aliases
-    -- would otherwise resolve vec_id inside the transform to the
-    -- shifted output alias and perturb the wrong dims
-    SELECT vec_id, v FROM orig
-    UNION ALL
-    SELECT oid + %(off)s,
-           list_transform(generate_series(1, len(v)),
-               i -> CASE WHEN i = (oid %% 64) + 1 THEN v[i] + %(eps)s
-                         WHEN i = ((oid * 7) %% 64) + 1 THEN v[i] - %(eps)s
-                         ELSE v[i] END)
-    FROM (SELECT vec_id AS oid, v FROM orig WHERE vec_id %% %(mod)s = 0)
-),
-pairs AS (
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           list_reduce(list_transform(generate_series(1, len(a.v)),
-                                      i -> a.v[i] * b.v[i]),
-                       (x, y) -> x + y)
-           / (sqrt(list_reduce(list_transform(a.v, x -> x*x), (x,y) -> x+y))
-              * sqrt(list_reduce(list_transform(b.v, x -> x*x), (x,y) -> x+y)))
-             AS cos
-    FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.99
-""" % {"eps": _EMB_EPS, "off": PLANT_ID_OFFSET, "mod": VEC_SCALE_MOD}
+    UNION ALL{perturbed_vectors_sql(VEC_SCALE_MOD)}""")
 
 
 def _emb_multiprobe_corpus(emb: DataFrame) -> DataFrame:
-    """Base embeddings + planted perturbed copies (+eps on dim
-    vec_id%%64, -eps on dim (7*vec_id)%%64, first-match-wins when the
-    dims coincide — the CASE order matches the oracle exactly)."""
+    """Base embeddings + the perturbed plant of every
+    VEC_SCALE_MOD-th vector (``planting.perturbed_vectors``)."""
     base = emb.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
-    # rename the original id FIRST: referencing vec_id inside the
-    # transform lambda while the same select aliases vec_id+100000 AS
-    # vec_id resolves to the lateral alias (the SHIFTED id) in Spark
-    # 3.4+, silently perturbing the wrong dims
-    j1 = F.col("oid") % 64
-    j2 = (F.col("oid") * 7) % 64
-    perturbed = (
-        # planted synthetic near-dups (see dedup_queries module doc)
-        emb.filter(F.col("vec_id") % VEC_SCALE_MOD == 0)
-        .select(F.col("vec_id").alias("oid"), "embedding")
-        .select(
-            (F.col("oid") + PLANT_ID_OFFSET).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: F.when(i == j1, x.cast("double") + _EMB_EPS)
-                .when(i == j2, x.cast("double") - _EMB_EPS)
-                .otherwise(x.cast("double")),
-            ).alias("v"),
-        )
-    )
-    return base.unionByName(perturbed)
+    return base.unionByName(perturbed_vectors(emb, VEC_SCALE_MOD))
 
 
 def _margin_keyed(
@@ -1086,10 +1104,6 @@ def _multiprobe_pairs(
     emb = load(spark, sf_dir, "embeddings")
     corpus = _emb_multiprobe_corpus(emb)
 
-    # The norm rides in the cache (folded once per vector), so the
-    # pair verify pays one dot per candidate instead of refolding
-    # both sides' norms per pair (guide §2.2) — same per-pair
-    # expression tree, cos bit-identical.
     keyed = (
         _margin_keyed(corpus, n_planes)
         .withColumn("nv", V.norm(F.col("v")))
@@ -1110,29 +1124,10 @@ def _multiprobe_pairs(
         )
         .distinct()
     )
-    va = keyed.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
+    pairs = cand.join(_cos_side(keyed, "vec_a", "a"), "vec_a").join(
+        _cos_side(keyed, "vec_b", "b"), "vec_b"
     )
-    vb = keyed.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (
-                V.dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb"))
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.99)
-    )
+    return _cos_verified(pairs, "vec_a", "vec_b")
 
 
 _EMB_PROD_PLANES = 24  # the corpus-size knob at its 100x setting:
@@ -1174,24 +1169,13 @@ def dedup_embedding_multiprobe_scaled(
 # --------------------------------------------- minhash recall harness
 
 _MH_RECALL_ORACLE = f"""
-WITH corpus AS ({DOC_NEAR_CORPUS_SQL}
-),
-tok AS (
-    SELECT doc_id, string_split(text, ' ') AS w FROM corpus
-),
-shx AS (
-    SELECT doc_id,
-           list_distinct([array_to_string(w[i:i+2], ' ')
-                          for i in generate_series(1, len(w) - 2)]) AS sh
-    FROM tok WHERE len(w) >= 3
-),
+WITH {_MINHASH_CAND_CTES},
 truth AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM shx a JOIN shx b ON b.doc_id = a.doc_id + {PLANT_ID_OFFSET}
-    WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-          / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
+    FROM sh a JOIN sh b ON b.doc_id = a.doc_id + {PLANT_ID_OFFSET}
+    WHERE {_JAC_SQL.format(a="a.sh", b="b.sh")} >= 0.8
 ),
-found AS (SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})),
+found AS (SELECT doc_a, doc_b FROM pairs WHERE {_JAC} >= 0.8),
 hits AS (
     SELECT t.doc_a FROM truth t
     JOIN found f ON t.doc_a = f.doc_a AND t.doc_b = f.doc_b
@@ -1208,35 +1192,22 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall harness for the MinHash-LSH dedup — the dedup-family
     counterpart of ann_recall_at_k: ground truth is the PLANTED
     near-dup pairs that genuinely clear the 0.8 shingle-Jaccard bar
-    (computed directly, one |planted|-sized join — never all-pairs),
-    recall = the fraction the banded LSH candidates recover. With 16
+    (the same verify run on the |planted| (x, x + offset) pairs —
+    never all-pairs), recall = the fraction the banded LSH candidates
+    recover. Both legs read the one pinned shingle table. With 16
     hashes / 4 bands at J≥0.8 the collision probability per pair is
     1-(1-0.8⁴)^4 ≈ 0.92 per the S-curve; the measured value tracks
     it. The measurement loop a dedup rollout needs before trusting a
     sketch at scale."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = plant_near_docs(docs).filter(
-        F.size(F.split(F.col("text"), " ")) >= 3
-    )
-    toks = F.split(F.col("text"), " ")
-    sh = corpus.select("doc_id", SK.word_shingles(toks, 3).alias("sh"))
-
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(
+    hashed, cand = minhash_shingle_candidates(spark, sf_dir)
+    planted = hashed.filter(F.col("doc_id") >= PLANT_ID_OFFSET).select(
         (F.col("doc_id") - PLANT_ID_OFFSET).alias("doc_a"),
         F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-    ).filter(F.col("doc_b") >= PLANT_ID_OFFSET)
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
     )
-    truth = (
-        a.join(b, "doc_a")
-        .filter(jac >= 0.8)
-        .select("doc_a", "doc_b")
+    truth = _jaccard_pairs(hashed, hashed, planted, "doc_a", "doc_b")
+    found = _jaccard_pairs(hashed, hashed, cand, "doc_a", "doc_b").select(
+        "doc_a", "doc_b"
     )
-
-    found = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     hits = truth.join(found, ["doc_a", "doc_b"])
     return (
         truth.agg(F.count(F.lit(1)).alias("n_true"))
@@ -1288,17 +1259,17 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep is one join + groupBy, and the driver only ever sees the
     single changed-row COUNT — the standard Spark connected-
     components loop at edge-list scale). Oracle = a recursive-CTE
-    transitive closure over the same pairs."""
-    def _pinned_ids() -> dict:
-        # shared helper (registry.pinned_rdd_ids) bound to this session
-        return pinned_rdd_ids(spark)
+    transitive closure over the same pairs.
 
-    # blocks pinned BEFORE this query ran (e.g. a session-lifetime
-    # Lloyd codebook pin) are not ours to release: unpersisting a
-    # localCheckpoint LOSES the frame (lineage is truncated), so the
-    # intra-query cleanup below must touch only blocks this query made
-    preexisting = set(_pinned_ids())
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    The query releases exactly the pins it made, by handle: the
+    MinHash candidate stage's two, the edge list's and every sweep's
+    but the last. Unpersisting a localCheckpoint LOSES the frame (its
+    lineage is truncated), so a pin anyone else made — before or
+    while this query runs — is never touched."""
+    hashed, cand = minhash_shingle_candidates(spark, sf_dir)
+    pairs = _jaccard_pairs(hashed, hashed, cand, "doc_a", "doc_b").select(
+        "doc_a", "doc_b"
+    )
     edges = pairs.unionByName(
         pairs.select(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
@@ -1315,10 +1286,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("label", F.col("n"))
     )
 
-    # this query's own pins so far: the minhash candidate subtree +
-    # edges' checkpoint — released together after the loop
-    edge_ids = set(_pinned_ids()) - preexisting
-    prior_sweep = {}  # id -> jrdd of the PREVIOUS sweep's checkpoint
+    prior_sweep = None
     for _ in range(20):  # >= max component diameter; fixture: 1
         neighbor_min = (
             edges.join(
@@ -1358,12 +1326,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the query's whole lifetime and shrink the execution-memory
         # pool at sf10 (round-8 advice: the intra-query twin of the
         # drop_query_caches leak class). Blocking removal on purpose.
-        release_pins(prior_sweep.values())
-        prior_sweep = {
-            i: j
-            for i, j in _pinned_ids().items()
-            if i not in edge_ids and i not in preexisting
-        }
+        if prior_sweep is not None:
+            release_pins([_pin_rdd(prior_sweep)])
+        prior_sweep = updated
         changed = updated.filter(
             F.col("new_label") != F.col("label")
         ).count()  # scalar convergence probe, not data movement
@@ -1373,9 +1338,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result depends only on the LAST sweep's checkpoint — the
     # edge list (which embeds the whole minhash pipeline) can be
     # released before the caller materializes the result
-    release_pins(
-        j for i, j in _pinned_ids().items() if i in edge_ids
-    )
+    release_pins(_pin_rdd(p) for p in (hashed, cand, edges))
     return labels.select(
         F.col("n").alias("doc_id"), F.col("label").alias("canonical_id")
     )
@@ -1556,18 +1519,12 @@ _CONTAIN_T = 0.9
 
 _CONTAIN_ORACLE = f"""
 WITH {_MINHASH_CAND_CTES}
-SELECT c.doc_a, c.doc_b,
-       CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / len(sa.sh) AS contain_a,
-       CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / len(sb.sh) AS contain_b
-FROM cand c
-JOIN sh sa ON c.doc_a = sa.doc_id
-JOIN sh sb ON c.doc_b = sb.doc_id
-WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / len(sa.sh) >= {_CONTAIN_T}
-   OR CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-         / len(sb.sh) >= {_CONTAIN_T}
+SELECT doc_a, doc_b,
+       CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(sa) AS contain_a,
+       CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(sb) AS contain_b
+FROM pairs
+WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(sa) >= {_CONTAIN_T}
+   OR CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(sb) >= {_CONTAIN_T}
 """
 
 
@@ -1578,11 +1535,11 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A|/|B| (tiny — symmetric dedup never fires) but containment
     C(A→B) = |A∩B|/|A| ≈ 1. Web-corpus pipelines run exactly this
     to drop pages that are boilerplate-wrapped copies of shorter
-    sources. Same LSH band candidates as dedup_minhash_lsh
-    (``minhash_shingle_candidates`` — one candidate machinery, two
-    verifiers), verify keeps any pair where EITHER direction clears
-    0.9 and reports both directions, so the consumer can tell
-    "A inside B" from "B inside A".
+    sources. Same LSH band candidates and shingle payload join as
+    dedup_minhash_lsh (one candidate machinery, two verifiers);
+    verify keeps any pair where EITHER direction clears 0.9 and
+    reports both directions, so the consumer can tell "A inside B"
+    from "B inside A".
 
     Note the recall asymmetry this inherits: MinHash collision
     probability tracks JACCARD, so a tiny-doc-in-huge-doc pair can
@@ -1592,31 +1549,11 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant). The oracle computes over the same candidates, so the
     check pins the verifier, not the S-curve."""
     hashed, cand = minhash_shingle_candidates(spark, sf_dir)
-    sa = hashed.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-    )
-    sb = hashed.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-    )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    contain_a = inter / F.size("sh_a")
-    contain_b = inter / F.size("sh_b")
-    # Broadcast direction matters at scale: only the id-pair table
-    # ``cand`` (and its distinct-id semi filter) is ever broadcast —
-    # INTO the corpus-sized shingle scan. The shingle payloads
-    # themselves (sh_a / sh_b) are never broadcast: the A side picks
-    # up its partner id via the broadcast cand join, the B side is
-    # semi-filtered to candidate docs, and the two candidate-bounded
-    # payload streams meet in ONE shuffle join on doc_b — the same
-    # discipline dedup_minhash_lsh's verifier uses.
-    withA = sa.join(F.broadcast(cand), "doc_a")
-    sb_cand = sb.join(
-        F.broadcast(cand.select("doc_b").distinct()), "doc_b", "semi"
-    )
     return (
-        sb_cand.join(withA, "doc_b")
-        .withColumn("contain_a", contain_a)
-        .withColumn("contain_b", contain_b)
+        _shingle_pairs(hashed, hashed, cand, "doc_a", "doc_b")
+        .withColumn("contain_a", inter / F.size("sh_a"))
+        .withColumn("contain_b", inter / F.size("sh_b"))
         .filter(
             (F.col("contain_a") >= _CONTAIN_T)
             | (F.col("contain_b") >= _CONTAIN_T)
@@ -1639,25 +1576,13 @@ cent AS (
 ),
 assign AS (
     SELECT vec_id, v, cid, ccos FROM (
-        SELECT c0.vec_id, c0.v, c.cid,
-               list_reduce(list_transform(generate_series(1, len(c0.v)),
-                           i -> c0.v[i] * c.cv[i]), (x, y) -> x + y)
-               / (sqrt(list_reduce(list_transform(c0.v, x -> x*x),
-                                   (x,y) -> x+y))
-                  * sqrt(list_reduce(list_transform(c.cv, x -> x*x),
-                                     (x,y) -> x+y))) AS ccos,
+        SELECT vec_id, v, cid, ccos,
                row_number() OVER (
-                   PARTITION BY c0.vec_id
-                   ORDER BY list_reduce(list_transform(
-                                generate_series(1, len(c0.v)),
-                                i -> c0.v[i] * c.cv[i]), (x, y) -> x + y)
-                            / (sqrt(list_reduce(list_transform(c0.v,
-                                        x -> x*x), (x,y) -> x+y))
-                               * sqrt(list_reduce(list_transform(c.cv,
-                                        x -> x*x), (x,y) -> x+y))) DESC,
-                            c.cid ASC
+                   PARTITION BY vec_id ORDER BY ccos DESC, cid ASC
                ) AS rn
-        FROM corpus c0 CROSS JOIN cent c
+        FROM (SELECT c0.vec_id, c0.v, c.cid,
+                     {COS_SQL.format(a="c0.v", b="c.cv")} AS ccos
+              FROM corpus c0 CROSS JOIN cent c)
     ) WHERE rn = 1
 ),
 canon AS (
@@ -1665,12 +1590,7 @@ canon AS (
 ),
 scored AS (
     SELECT a.vec_id, a.cid, k.canon_id,
-           list_reduce(list_transform(generate_series(1, len(a.v)),
-                       i -> a.v[i] * c.v[i]), (x, y) -> x + y)
-           / (sqrt(list_reduce(list_transform(a.v, x -> x*x),
-                               (x,y) -> x+y))
-              * sqrt(list_reduce(list_transform(c.v, x -> x*x),
-                                 (x,y) -> x+y))) AS canon_cos
+           {COS_SQL.format(a="a.v", b="c.v")} AS canon_cos
     FROM assign a
     JOIN canon k ON a.cid = k.cid
     JOIN assign c ON c.vec_id = k.canon_id
@@ -1820,161 +1740,107 @@ def semantic_clusters_from(corpus: DataFrame, cent: DataFrame) -> DataFrame:
 
 # --------------------------------- incremental (batch-vs-index) dedup
 
-# planted near-dups of EVEN (indexed) docs: % (2 * DOC_NEAR_MOD)
-# selects docs that are both indexed (even) and planting-eligible
-_INC_MOD = 2 * DOC_NEAR_MOD
+# A planted batch copy: (mod, residue, id shift, text suffix) — every
+# doc with doc_id % mod == residue re-enters the batch at doc_id +
+# shift with the suffix appended. The duplicate plants pick even
+# docs, so each copy duplicates an INDEXED doc. Both language sides
+# format from these tuples.
+_INC_PLANTS = ((2 * DOC_NEAR_MOD, 0, PLANT_ID_OFFSET, " zzz"),)
+_BLOOM_PLANTS = ((2 * DOC_EXACT_MOD, 0, PLANT_ID_OFFSET, ""),)
+_EP11_PLANTS = _BLOOM_PLANTS + (
+    (2 * DOC_NEAR_MOD, 0, 2 * PLANT_ID_OFFSET, " zzz"),
+    # odd docs gaining a 20-token junk tail: the low-quality plants
+    (42, 21, 3 * PLANT_ID_OFFSET, " qq7" * 20),
+)
+
+
+def _ingest_split(docs: DataFrame, plants) -> tuple[DataFrame, DataFrame]:
+    """The ingest split core: (idx, batch) — even docs are the index
+    (in production: the corpus built by prior runs); the batch is the
+    odd docs plus one planted copy per ``plants`` entry."""
+    idx = docs.filter(F.col("doc_id") % 2 == 0)
+    batch = docs.filter(F.col("doc_id") % 2 == 1)
+    for mod, res, shift, suffix in plants:
+        text = F.col("text")
+        if suffix:
+            text = F.concat(text, F.lit(suffix))
+        batch = batch.unionByName(
+            docs.filter(F.col("doc_id") % mod == res).select(
+                (F.col("doc_id") + shift).alias("doc_id"), text.alias("text")
+            )
+        )
+    return idx, batch
+
+
+def _ingest_sql(plants) -> str:
+    """The oracle twin of ``_ingest_split``: the CTEs idx and batch."""
+    legs = ""
+    for mod, res, shift, suffix in plants:
+        text = f"text || '{suffix}'" if suffix else "text"
+        legs += f"""
+    UNION ALL
+    SELECT doc_id + {shift}, {text} FROM documents
+    WHERE doc_id % {mod} = {res}"""
+    idx = "SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0"
+    return f"""idx AS ({idx}),
+batch AS (
+    SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1{legs}
+)"""
+
 
 _INC_ORACLE = f"""
-WITH allr AS (
-    SELECT 0 AS side, doc_id, text FROM documents WHERE doc_id % 2 = 0
-    UNION ALL
-    SELECT 1, doc_id, text FROM documents WHERE doc_id % 2 = 1
-    UNION ALL
-    SELECT 1, doc_id + {PLANT_ID_OFFSET}, text || ' zzz' FROM documents
-    WHERE doc_id % {_INC_MOD} = 0
-),
-tok AS (SELECT side, doc_id, string_split(text, ' ') AS w FROM allr),
-sh AS (
-    SELECT side, doc_id,
-           list_distinct([array_to_string(w[i:i+2], ' ')
-                          for i in generate_series(1, len(w) - 2)]) AS sh
-    FROM tok WHERE len(w) >= 3
-),
-hh AS (
-    SELECT side, doc_id, sh,
-           [('0x' || substr(m, 1, 8))::BIGINT for m in mm] AS h1,
-           [('0x' || substr(m, 9, 8))::BIGINT for m in mm] AS h2
-    FROM (SELECT side, doc_id, sh, [md5(x) for x in sh] AS mm FROM sh)
-),
-sig AS (SELECT side, doc_id, sh, [{_mh_list}] AS m FROM hh),
-bands AS (
-    SELECT side, doc_id, unnest([{_band_list}]) AS band_key FROM sig
-),
-cand AS (
-    SELECT DISTINCT n.doc_id AS new_doc, i.doc_id AS canon_doc
-    FROM bands n JOIN bands i ON n.band_key = i.band_key
-    WHERE n.side = 1 AND i.side = 0
-)
-SELECT c.new_doc, c.canon_doc,
-       CAST(len(list_intersect(sn.sh, si.sh)) AS DOUBLE)
-         / len(list_distinct(list_concat(sn.sh, si.sh))) AS jaccard
-FROM cand c
-JOIN sh sn ON sn.side = 1 AND c.new_doc = sn.doc_id
-JOIN sh si ON si.side = 0 AND c.canon_doc = si.doc_id
-WHERE CAST(len(list_intersect(sn.sh, si.sh)) AS DOUBLE)
-         / len(list_distinct(list_concat(sn.sh, si.sh))) >= 0.8
+WITH {_ingest_sql(_INC_PLANTS)},
+{_minhash_ctes(batch="batch")}
+SELECT new_doc, canon_doc, {_JAC} AS jaccard
+FROM pairs WHERE {_JAC} >= 0.8
 """
 
 
-def minhash_prep(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Shingle + hash one side of an incremental-minhash probe:
-    (doc_id, sh, h1, h2) for docs with >= 3 tokens. UNPINNED — the
-    caller pins it (each side feeds banding AND its verify join, so
-    a pin is always wanted; leaving it to the caller lets
-    independent sides pin as concurrent jobs, guide §2.6)."""
-    corpus = df.filter(
-        F.size(F.split(F.col("text"), " ")) >= 3
-    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toks = F.split(F.col("text"), " ")
-    sh = corpus.select("doc_id", SK.word_shingles(toks, 3).alias("sh"))
-    h1, h2 = SK.shingle_hashes(F.col("sh"))
-    return sh.select("doc_id", "sh", h1.alias("h1"), h2.alias("h2"))
-
-
-def incremental_minhash_pairs(
-    spark: SparkSession,
-    idx_docs: DataFrame,
-    batch_docs: DataFrame,
-    idx_prepped: DataFrame | None = None,
-) -> DataFrame:
-    """Shared builder: batch-vs-index banded-minhash near-dup pairs
-    (new_doc, canon_doc, jaccard >= 0.8) for arbitrary (doc_id,
-    text) frames — the parameterized body of
-    dedup_incremental_minhash, reused by ep11_ingest_dedup (the
-    semantic_clusters_from discipline: one source for both the
-    registered query and the composite).
-
-    ``idx_prepped``: an already-PINNED ``minhash_prep`` of the index
-    side, for callers that overlapped that build with earlier
-    stages (ep11); when None both sides are prepped here and pinned
-    as concurrent jobs — they share no lineage, so serializing the
-    two pins only added a barrier (guide §2.6)."""
-    if idx_prepped is None:
-        h_idx, h_new = pin_concurrently(
-            minhash_prep(spark, idx_docs), minhash_prep(spark, batch_docs)
-        )
-    else:
-        h_idx = idx_prepped
-        h_new = minhash_prep(spark, batch_docs).localCheckpoint(eager=True)
-
-    def bands(h: DataFrame, id_alias: str) -> DataFrame:
-        sigs = SK.minhash_from_hashes(
-            F.col("h1"), F.col("h2"), _NUM_HASHES
-        )
-        return h.select(
-            F.col("doc_id").alias(id_alias),
-            F.explode(SK.lsh_band_keys(sigs, _BANDS)).alias("band_key"),
-        )
-
+def incremental_minhash_pairs(h_idx: DataFrame, h_new: DataFrame) -> DataFrame:
+    """Batch-vs-index banded-minhash near-dup pairs (new_doc,
+    canon_doc, jaccard >= 0.8) from the pinned ``minhash_prep`` of the
+    index side and of the batch — the body of
+    dedup_incremental_minhash, reused by ep11_ingest_dedup. The band
+    join is ASYMMETRIC (batch bands x index bands): no batch-internal
+    or index-internal pair ever materializes."""
     cand = (
-        bands(h_new, "new_doc")
-        .join(bands(h_idx, "canon_doc"), "band_key")
+        _band_keys(h_new)
+        .select(F.col("doc_id").alias("new_doc"), "band_key")
+        .join(
+            _band_keys(h_idx).select(
+                F.col("doc_id").alias("canon_doc"), "band_key"
+            ),
+            "band_key",
+        )
         .select("new_doc", "canon_doc")
         .distinct()
     )
-
-    sn = h_new.select(
-        F.col("doc_id").alias("new_doc"), F.col("sh").alias("sh_n")
-    )
-    si = h_idx.select(
-        F.col("doc_id").alias("canon_doc"), F.col("sh").alias("sh_i")
-    )
-    jac = F.size(F.array_intersect("sh_n", "sh_i")).cast(
-        "double"
-    ) / F.size(F.array_union("sh_n", "sh_i"))
-    with_new = sn.join(F.broadcast(cand), "new_doc")
-    si_cand = si.join(
-        F.broadcast(cand.select("canon_doc").distinct()),
-        "canon_doc",
-        "semi",
-    )
-    return (
-        si_cand.join(with_new, "canon_doc")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.8)
-        .select("new_doc", "canon_doc", "jaccard")
-    )
+    return _jaccard_pairs(h_new, h_idx, cand, "new_doc", "canon_doc")
 
 
 @register("dedup_incremental_minhash", oracle=_INC_ORACLE)
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup dedup — the DAILY-INGEST shape: a new
     batch of documents probes an EXISTING corpus index instead of
-    re-deduping the whole corpus. Even doc_ids play the indexed
-    canon (in production: the banded signature table persisted from
-    prior runs — it is NOT recomputed per batch, which is the whole
-    point: batch cost is O(|batch|) hashing + band probes, never
-    O(|corpus|)); odd doc_ids plus planted near-dups of indexed
-    docs play the incoming batch. Output: (new_doc, canon_doc)
-    pairs with exact Jaccard >= 0.8 — the batch docs to drop (or
-    link) before appending. Batch-internal dups are deliberately
-    out of scope here (that is dedup_minhash_lsh run ON the batch;
-    a real pipeline composes both).
+    re-deduping the whole corpus (``_ingest_split``: the index is the
+    even docs, the batch the odd docs plus ' zzz' near-dups of
+    indexed docs). In production the index side is the banded
+    signature table persisted from prior runs — it is NOT recomputed
+    per batch, which is the whole point: batch cost is O(|batch|)
+    hashing + band probes, never O(|corpus|). Output: (new_doc,
+    canon_doc) pairs with exact Jaccard >= 0.8 — the batch docs to
+    drop (or link) before appending. Batch-internal dups are
+    deliberately out of scope here (that is dedup_minhash_lsh run ON
+    the batch; a real pipeline composes both).
 
-    Scale shape: same banded LSH as dedup_minhash_lsh but the
-    candidate join is ASYMMETRIC (batch bands x index bands — no
-    batch-internal or index-internal pairs ever materialize), and
-    verify follows the round-6 broadcast discipline: only candidate
-    id pairs broadcast; shingle payloads meet in one shuffle join."""
+    The two prepped sides share no lineage, so they pin as
+    concurrent jobs (guide §2.6)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    idx_docs = docs.filter(F.col("doc_id") % 2 == 0)
-    batch_docs = docs.filter(F.col("doc_id") % 2 == 1).unionByName(
-        docs.filter(F.col("doc_id") % _INC_MOD == 0).select(
-            (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zzz")).alias("text"),
-        )
+    idx, batch = _ingest_split(docs, _INC_PLANTS)
+    h_idx, h_new = pin_concurrently(
+        minhash_prep(spark, idx), minhash_prep(spark, batch)
     )
-    return incremental_minhash_pairs(spark, idx_docs, batch_docs)
+    return incremental_minhash_pairs(h_idx, h_new)
 
 
 # ------------------------------- incremental (batch-vs-filter) dedup
@@ -1985,18 +1851,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # positions / 65536) gives a measurable-but-small false-positive
 # rate, so the FP accounting path is exercised by the driver sweep.
 _BLOOM_M = 1 << 16
-# exact copies of every (2 * DOC_EXACT_MOD)-th doc: eligible docs
-# must be even (indexed side), mirroring dedup_incremental_minhash
-_BLOOM_MOD = 2 * DOC_EXACT_MOD
 
 _BLOOM_ORACLE = f"""
-WITH idx AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-batch AS (
-    SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-    UNION ALL
-    SELECT doc_id + {PLANT_ID_OFFSET}, text FROM documents
-    WHERE doc_id % {_BLOOM_MOD} = 0
-),
+WITH {_ingest_sql(_BLOOM_PLANTS)},
 fpos AS (
     SELECT DISTINCT pos FROM (
         SELECT ('0x' || substr(md5(text), 1, 7))::BIGINT % {_BLOOM_M}
@@ -2025,22 +1882,52 @@ LEFT JOIN imd5 i ON b.m = i.m
 """
 
 
-def _bloom_pos(off: int):
+def _bloom_pos(md5: str, off: int):
+    """Bloom position ``off`` (1 or 9) of an md5 hex-string SQL
+    expression: a 28-bit slice of the digest, mod m."""
     return F.expr(
-        f"cast(conv(substr(md5(text), {off}, 7), 16, 10) as bigint)"
+        f"cast(conv(substr({md5}, {off}, 7), 16, 10) as bigint)"
         f" % {_BLOOM_M}"
     )
 
 
-def _bloom_pos_of_md5(md5_col: str, off: int):
-    """Bloom position from an ALREADY-COMPUTED md5 column — the same
-    value _bloom_pos(off) yields from the text (the position is a
-    substring of the md5 hex string), so an index side that has
-    materialized its distinct md5 set derives its position set from
-    that table instead of re-scanning and re-hashing the corpus."""
-    return F.expr(
-        f"cast(conv(substr({md5_col}, {off}, 7), 16, 10) as bigint)"
-        f" % {_BLOOM_M}"
+def _bloom_probe(
+    imd5: DataFrame, batch: DataFrame, how: str, *keep: str
+) -> DataFrame:
+    """The Bloom gate core: the batch docs as (doc_id, *keep, p1, p2,
+    m = md5(text)), joined ``how`` on both probe positions to the
+    filter's position set (columns f1_pos, f2_pos).
+
+    The filter is represented RELATIONALLY as its set of distinct set
+    positions (<= m = 65,536 rows) — semantically identical to the
+    bitmap (position-set join == bit test), exact on both engines,
+    and mergeable the same way (union of position sets == OR of
+    bitmaps; a production compaction packs positions into m/64 longs
+    via groupBy(pos div 64) + bit_or and ships ~8 KB to every
+    executor). Its positions derive from ``imd5``, the PINNED
+    distinct md5 set of the index (column i_m): a position is a
+    substring of the md5 hex string, bit-identical to hashing the
+    text again, so the index side is scanned once, at pin time
+    (guide §2.4: building the two broadcasts from the text re-ran
+    the index union + distinct per build — 5 corpus scans per run).
+    Both probes are broadcast dimension joins, so the batch-side
+    cost is O(|batch|)."""
+    fpos = (
+        imd5.select(_bloom_pos("i_m", 1).alias("pos"))
+        .unionByName(imd5.select(_bloom_pos("i_m", 9).alias("pos")))
+        .distinct()
+    )
+    b = batch.select(
+        "doc_id",
+        *keep,
+        _bloom_pos("md5(text)", 1).alias("p1"),
+        _bloom_pos("md5(text)", 9).alias("p2"),
+        F.md5("text").alias("m"),
+    )
+    f1 = fpos.select(F.col("pos").alias("f1_pos"))
+    f2 = fpos.select(F.col("pos").alias("f2_pos"))
+    return b.join(F.broadcast(f1), b.p1 == F.col("f1_pos"), how).join(
+        F.broadcast(f2), b.p2 == F.col("f2_pos"), how
     )
 
 
@@ -2061,66 +1948,27 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership sketch, and the CMS/HLL family (a15/a16) with the
     third classic mergeable sketch.
 
-    The filter is represented RELATIONALLY as its set of distinct
-    set positions (<= m = 65,536 rows) — semantically identical to the
-    bitmap (position-set join == bit test), exact on both engines,
-    and mergeable the same way (union of position sets == OR of
-    bitmaps; a production compaction packs positions into m/64
-    longs via groupBy(pos div 64) + bit_or and ships ~8 KB to
-    every executor). Hashes are two disjoint 28-bit slices of
-    md5(text) — the one hash both engines compute bit-identically.
-
-    Plan/scale: one distinct over 2x|corpus| positions (m-bounded
-    output, map-side combined), then the batch scan joins the
-    position set twice and the md5 set once — all three are
-    AQE-broadcast dimension joins, so the batch-side cost is
-    O(|batch|) with NO corpus-sized shuffle at batch time; in
-    production the filter/md5 tables persist from the prior run
-    (the dedup_incremental_minhash discipline). Sizing: m here is
-    fixture-scaled; production sizes m at ~10 bits per indexed key
-    (FPR ~1%) and re-shards the filter when the corpus outgrows it.
+    Plan/scale: ``_bloom_probe`` (left joins) plus the md5 ground-
+    truth join — all three AQE-broadcast dimension joins, NO
+    corpus-sized shuffle at batch time; in production the filter/md5
+    tables persist from the prior run (the dedup_incremental_minhash
+    discipline). Sizing: m here is fixture-scaled; production sizes
+    m at ~10 bits per indexed key (FPR ~1%) and re-shards the filter
+    when the corpus outgrows it.
 
     Reference parity: beyond-reference (north-star extension).
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = docs.filter(F.col("doc_id") % 2 == 0)
-    batch = docs.filter(F.col("doc_id") % 2 == 1).unionByName(
-        docs.filter(F.col("doc_id") % _BLOOM_MOD == 0).select(
-            (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"), "text"
-        )
-    )
-
-    # ONE index pass (round 16, guide §2.4): the distinct md5 set is
-    # pinned, and both Bloom position slices derive from the pinned
-    # md5 strings (pos = a substr of the md5 — bit-identical to
-    # hashing the text again). Before, fpos was consumed twice (f1,
-    # f2) and each broadcast build re-ran the idx union+distinct:
-    # 5 corpus scans per run; now 1 at pin time + the batch scan.
+    idx, batch = _ingest_split(docs, _BLOOM_PLANTS)
     imd5 = (
-        idx.select(F.md5("text").alias("m"))
+        idx.select(F.md5("text").alias("i_m"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    fpos = (
-        imd5.select(_bloom_pos_of_md5("m", 1).alias("pos"))
-        .unionByName(imd5.select(_bloom_pos_of_md5("m", 9).alias("pos")))
-        .distinct()
-    )
-
-    b = batch.select(
-        "doc_id",
-        _bloom_pos(1).alias("p1"),
-        _bloom_pos(9).alias("p2"),
-        F.md5("text").alias("m"),
-    )
-    f1 = fpos.select(F.col("pos").alias("f1_pos"))
-    f2 = fpos.select(F.col("pos").alias("f2_pos"))
-    i = imd5.select(F.col("m").alias("i_m"))
     hit = F.col("f1_pos").isNotNull() & F.col("f2_pos").isNotNull()
     return (
-        b.join(F.broadcast(f1), b.p1 == F.col("f1_pos"), "left")
-        .join(F.broadcast(f2), b.p2 == F.col("f2_pos"), "left")
-        .join(F.broadcast(i), b.m == F.col("i_m"), "left")
+        _bloom_probe(imd5, batch, "left")
+        .join(F.broadcast(imd5), F.col("m") == F.col("i_m"), "left")
         .select(
             "doc_id",
             hit.alias("bloom_hit"),
@@ -2132,66 +1980,16 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------- ep11: the incremental-ingest dedup cascade
 
-_EP11_EXACT_MOD = 2 * DOC_EXACT_MOD  # exact copies of indexed docs
-_EP11_NEAR_MOD = 2 * DOC_NEAR_MOD  # ' zzz' near-dups of indexed docs
-_EP11_LQ_MOD = 42  # % 42 == 21 -> odd docs gaining a junk tail
-_EP11_LQ_REP = 20  # junk tokens appended to the low-quality plants
-
 _EP11_ORACLE = f"""
-WITH idx AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-batch AS (
-    SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-    UNION ALL
-    SELECT doc_id + {PLANT_ID_OFFSET}, text FROM documents
-    WHERE doc_id % {_EP11_EXACT_MOD} = 0
-    UNION ALL
-    SELECT doc_id + {2 * PLANT_ID_OFFSET}, text || ' zzz' FROM documents
-    WHERE doc_id % {_EP11_NEAR_MOD} = 0
-    UNION ALL
-    SELECT doc_id + {3 * PLANT_ID_OFFSET},
-           text || repeat(' qq7', {_EP11_LQ_REP}) FROM documents
-    WHERE doc_id % {_EP11_LQ_MOD} = 21
-),
+WITH {_ingest_sql(_EP11_PLANTS)},
 imd5 AS (SELECT DISTINCT md5(text) AS m FROM idx),
 exact AS (
     SELECT b.doc_id FROM batch b JOIN imd5 i ON md5(b.text) = i.m
 ),
 s1 AS (SELECT * FROM batch
        WHERE doc_id NOT IN (SELECT doc_id FROM exact)),
-allr AS (
-    SELECT 0 AS side, doc_id, text FROM idx
-    UNION ALL
-    SELECT 1, doc_id, text FROM s1
-),
-tok AS (SELECT side, doc_id, string_split(text, ' ') AS w FROM allr),
-shq AS (
-    SELECT side, doc_id,
-           list_distinct([array_to_string(w[i:i+2], ' ')
-                          for i in generate_series(1, len(w) - 2)]) AS sh
-    FROM tok WHERE len(w) >= 3
-),
-hh AS (
-    SELECT side, doc_id, sh,
-           [('0x' || substr(m, 1, 8))::BIGINT for m in mm] AS h1,
-           [('0x' || substr(m, 9, 8))::BIGINT for m in mm] AS h2
-    FROM (SELECT side, doc_id, sh, [md5(x) for x in sh] AS mm FROM shq)
-),
-sig AS (SELECT side, doc_id, sh, [{_mh_list}] AS m FROM hh),
-bands AS (
-    SELECT side, doc_id, unnest([{_band_list}]) AS band_key FROM sig
-),
-cand AS (
-    SELECT DISTINCT n.doc_id AS new_doc, i.doc_id AS canon_doc
-    FROM bands n JOIN bands i ON n.band_key = i.band_key
-    WHERE n.side = 1 AND i.side = 0
-),
-near AS (
-    SELECT DISTINCT c.new_doc FROM cand c
-    JOIN shq sn ON sn.side = 1 AND c.new_doc = sn.doc_id
-    JOIN shq si ON si.side = 0 AND c.canon_doc = si.doc_id
-    WHERE CAST(len(list_intersect(sn.sh, si.sh)) AS DOUBLE)
-          / len(list_distinct(list_concat(sn.sh, si.sh))) >= 0.8
-),
+{_minhash_ctes(batch="s1")},
+near AS (SELECT DISTINCT new_doc FROM pairs WHERE {_JAC} >= 0.8),
 s2 AS (SELECT * FROM s1
        WHERE doc_id NOT IN (SELECT new_doc FROM near)),
 lm AS (
@@ -2274,41 +2072,8 @@ def ep11_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: beyond-reference (north-star extension)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = docs.filter(F.col("doc_id") % 2 == 0)
-    batch = (
-        docs.filter(F.col("doc_id") % 2 == 1)
-        .unionByName(
-            docs.filter(F.col("doc_id") % _EP11_EXACT_MOD == 0).select(
-                (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"),
-                "text",
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % _EP11_NEAR_MOD == 0).select(
-                (F.col("doc_id") + 2 * PLANT_ID_OFFSET).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zzz")).alias("text"),
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % _EP11_LQ_MOD == 21).select(
-                (F.col("doc_id") + 3 * PLANT_ID_OFFSET).alias("doc_id"),
-                F.concat(
-                    F.col("text"),
-                    F.expr(f"repeat(' qq7', {_EP11_LQ_REP})"),
-                ).alias("text"),
-            )
-        )
-    )
+    idx, batch = _ingest_split(docs, _EP11_PLANTS)
 
-    # -- stage 1: Bloom gate pruning the exact-md5 verify join.
-    # The index md5 set is computed ONCE and pinned (distinct-text-
-    # bounded — the same bound the imd5 broadcast below already
-    # relies on); both Bloom position slices derive from the PINNED
-    # md5 strings (pos = a substr of the md5 — bit-identical to
-    # re-hashing the text), so the index side is scanned once here
-    # instead of five times (guide §2.4: the f1/f2 broadcasts used
-    # to re-run the idx union+distinct per build).
-    #
     # All THREE index-side tables the cascade ever needs — the md5
     # set (stage 1), the minhash prep (stage 2's probe target) and
     # the token LM (stage 3's scorer) — depend only on `idx`, never
@@ -2322,30 +2087,15 @@ def ep11_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         itoks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")),
         minhash_prep(spark, idx),
     )
-    fpos = (
-        imd5.select(_bloom_pos_of_md5("i_m", 1).alias("pos"))
-        .unionByName(imd5.select(_bloom_pos_of_md5("i_m", 9).alias("pos")))
-        .distinct()
-    )
-    b = batch.select(
-        "doc_id",
-        "text",
-        _bloom_pos(1).alias("p1"),
-        _bloom_pos(9).alias("p2"),
-        F.md5("text").alias("m"),
-    )
-    f1 = fpos.select(F.col("pos").alias("f1_pos"))
-    f2 = fpos.select(F.col("pos").alias("f2_pos"))
-    maybe = (
-        b.join(F.broadcast(f1), b.p1 == F.col("f1_pos"), "semi")
-        .join(F.broadcast(f2), b.p2 == F.col("f2_pos"), "semi")
-    )
+
+    # -- stage 1: the Bloom gate prunes the exact-md5 verify join.
     # Eager localCheckpoint on each stage's (tiny) dropped-id set:
     # every verdict leg of the final union re-embeds the earlier
     # stages (exact feeds 4 legs, near 3, cull 2) — unpinned, the
     # bloom/minhash subtrees would be rebuilt once PER LEG (the
     # r8 racing-consumer lesson); pinned, each stage runs exactly
     # once and the legs read its materialized blocks.
+    maybe = _bloom_probe(imd5, batch, "semi", "text")
     exact = (
         maybe.join(F.broadcast(imd5), maybe.m == F.col("i_m"), "semi")
         .select("doc_id")
@@ -2353,10 +2103,10 @@ def ep11_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s1 = batch.join(exact, "doc_id", "anti")
 
-    # -- stage 2: banded minhash probe of the corpus index (its
-    # index side was prepped in the stage-1 concurrent group)
+    # -- stage 2: banded minhash probe of the corpus index
+    h_new = minhash_prep(spark, s1).localCheckpoint(eager=True)
     near = (
-        incremental_minhash_pairs(spark, idx, s1, idx_prepped=h_idx)
+        incremental_minhash_pairs(h_idx, h_new)
         .select(F.col("new_doc").alias("doc_id"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -2420,34 +2170,23 @@ def ep11_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every 101st vector is the benchmark/eval set.
 _DECON_EVAL_MOD = 101
 
-_DECON_EMB_ORACLE = """
+_DECON_EMB_ORACLE = f"""
 WITH orig AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
     FROM embeddings
 ),
-ev AS (SELECT vec_id, v FROM orig WHERE vec_id %% %(em)s = 0),
+ev AS (SELECT vec_id, v FROM orig WHERE vec_id % {_DECON_EVAL_MOD} = 0),
 train AS (
-    SELECT vec_id, v FROM orig WHERE vec_id %% %(em)s <> 0
-    UNION ALL   -- planted leaks: perturbed copies of eval vectors
-    SELECT oid + %(off)s,
-           list_transform(generate_series(1, len(v)),
-               i -> CASE WHEN i = (oid %% 64) + 1 THEN v[i] + %(eps)s
-                         WHEN i = ((oid * 7) %% 64) + 1 THEN v[i] - %(eps)s
-                         ELSE v[i] END)
-    FROM (SELECT vec_id AS oid, v FROM ev)
+    SELECT vec_id, v FROM orig WHERE vec_id % {_DECON_EVAL_MOD} <> 0
+    UNION ALL{perturbed_vectors_sql(_DECON_EVAL_MOD)}
 ),
 pairs AS (
     SELECT t.vec_id AS train_id, e.vec_id AS eval_id,
-           list_reduce(list_transform(generate_series(1, len(t.v)),
-                                      i -> t.v[i] * e.v[i]),
-                       (x, y) -> x + y)
-           / (sqrt(list_reduce(list_transform(t.v, x -> x*x), (x,y) -> x+y))
-              * sqrt(list_reduce(list_transform(e.v, x -> x*x), (x,y) -> x+y)))
-             AS cos
+           {COS_SQL.format(a="t.v", b="e.v")} AS cos
     FROM train t CROSS JOIN ev e
 )
 SELECT train_id, eval_id, cos FROM pairs WHERE cos >= 0.99
-""" % {"eps": _EMB_EPS, "off": PLANT_ID_OFFSET, "em": _DECON_EVAL_MOD}
+"""
 
 
 @register("decon_semantic_embeddings", oracle=_DECON_EMB_ORACLE)
@@ -2481,27 +2220,18 @@ def decon_semantic_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: beyond-reference (north-star extension)."""
     emb = load(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
-    ev = base.filter(F.col("vec_id") % _DECON_EVAL_MOD == 0)
-    j1 = F.col("oid") % 64
-    j2 = (F.col("oid") * 7) % 64
-    planted = (
-        emb.filter(F.col("vec_id") % _DECON_EVAL_MOD == 0)
-        .select(F.col("vec_id").alias("oid"), "embedding")
-        .select(
-            (F.col("oid") + PLANT_ID_OFFSET).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: F.when(i == j1, x.cast("double") + _EMB_EPS)
-                .when(i == j2, x.cast("double") - _EMB_EPS)
-                .otherwise(x.cast("double")),
-            ).alias("v"),
-        )
+    ev = base.filter(F.col("vec_id") % _DECON_EVAL_MOD == 0).withColumn(
+        "nv", V.norm(F.col("v"))
     )
-    train = base.filter(
-        F.col("vec_id") % _DECON_EVAL_MOD != 0
-    ).unionByName(planted)
+    train = base.filter(F.col("vec_id") % _DECON_EVAL_MOD != 0).unionByName(
+        perturbed_vectors(emb, _DECON_EVAL_MOD)
+    )
 
-    tk = _margin_keyed(train).localCheckpoint(eager=True)
+    tk = (
+        _margin_keyed(train)
+        .withColumn("nv", V.norm(F.col("v")))
+        .localCheckpoint(eager=True)
+    )
     probes = _margin_probes(tk)
     # the eval side never probes — it needs only its exact sign
     # bucket and payload, not the margin mask/base (16 extra dot
@@ -2509,43 +2239,16 @@ def decon_semantic_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # select would drop)
     ek = ev.select(
         F.col("vec_id").alias("eval_id"),
-        V.sign_bucket(F.col("v"), V.hyperplane_weights(
-            _EMB_PLANES, _EMB_DIM
-        )).alias("bucket"),
-        F.col("v").alias("evv"),
+        V.sign_bucket(
+            F.col("v"), V.hyperplane_weights(_EMB_PLANES, _EMB_DIM)
+        ).alias("bucket"),
     )
     cand = (
-        probes.join(
-            F.broadcast(ek.select("eval_id", "bucket")),
-            probes.probe == F.col("bucket"),
-        )
+        probes.join(F.broadcast(ek), probes.probe == F.col("bucket"))
         .select(F.col("pid").alias("train_id"), "eval_id")
         .distinct()
     )
-    # Norms fold once per side before the verify join (guide §2.2)
-    # — same per-pair expression tree, cos bit-identical.
-    tv = tk.select(
-        F.col("vec_id").alias("train_id"),
-        F.col("v").alias("tv"),
-        V.norm(F.col("v")).alias("ntv"),
+    pairs = cand.join(_cos_side(tk, "train_id", "a"), "train_id").join(
+        F.broadcast(_cos_side(ev, "eval_id", "b")), "eval_id"
     )
-    return (
-        cand.join(tv, "train_id")
-        .join(
-            F.broadcast(
-                ek.select(
-                    "eval_id", "evv", V.norm(F.col("evv")).alias("nev")
-                )
-            ),
-            "eval_id",
-        )
-        .select(
-            "train_id",
-            "eval_id",
-            (
-                V.dot(F.col("tv"), F.col("evv"))
-                / (F.col("ntv") * F.col("nev"))
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.99)
-    )
+    return _cos_verified(pairs, "train_id", "eval_id")

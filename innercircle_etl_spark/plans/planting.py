@@ -9,6 +9,13 @@ identically on the Spark side (Python expressions) and the DuckDB
 side (oracle SQL literals); before round 5 each site duplicated the
 literal with a keep-in-sync comment (the footgun documented at
 dedup_queries.py:10-17). Now both sides format from here.
+
+The plantings: identical copies, ' zzz' near-dups and same-length
+one-char mutations of documents; 1.5x-scaled copies of vectors; and
+the perturbed plant, a ±eps shift of two coordinates of a vector
+(``perturbed_vectors_sql`` / ``perturbed_vectors``), which the
+margin-multiprobe dedups plant into the corpus and the semantic
+decontamination plants into the train side as leaked eval vectors.
 """
 
 from __future__ import annotations
@@ -31,6 +38,12 @@ CODEBOOK_MOD = 97
 # Planted copies live at original id + this offset, so pair results
 # are self-describing: (x, x + PLANT_ID_OFFSET).
 PLANT_ID_OFFSET = 100000
+
+# Step of the two-coordinate perturbation (±eps on two dims of a
+# vector). Small against the ~1.7 vector norm, so a planted copy keeps
+# cosine >= 0.999, but a projection near a hyperplane CAN change
+# sign — exactly the case plain sign-bucketing misses.
+VEC_PERTURB_EPS = 0.05
 
 
 # ------------------------------------------------- both-language forms
@@ -67,6 +80,25 @@ VEC_SCALE_CORPUS_SQL = f"""
     SELECT vec_id + {PLANT_ID_OFFSET},
            list_transform(embedding, x -> CAST(x AS DOUBLE) * 1.5)
     FROM embeddings WHERE vec_id % {VEC_SCALE_MOD} = 0"""
+
+
+def perturbed_vectors_sql(mod: int) -> str:
+    """Planted copies (vec_id + PLANT_ID_OFFSET, v) of every
+    ``mod``-th embedding: +eps on dim vec_id % 64, -eps on dim
+    (7 * vec_id) % 64, the first WHEN winning when the dims coincide.
+    ``oid`` keeps the ORIGINAL id visible: DuckDB's lateral aliases
+    would otherwise resolve vec_id inside the transform to the shifted
+    output id and perturb the wrong dims."""
+    return f"""
+    SELECT oid + {PLANT_ID_OFFSET},
+           list_transform(generate_series(1, len(v)),
+               i -> CASE WHEN i = (oid % 64) + 1 THEN v[i] + {VEC_PERTURB_EPS}
+                         WHEN i = ((oid * 7) % 64) + 1
+                              THEN v[i] - {VEC_PERTURB_EPS}
+                         ELSE v[i] END)
+    FROM (SELECT vec_id AS oid,
+                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+          FROM embeddings WHERE vec_id % {mod} = 0)"""
 
 
 def plant_exact_docs(docs):
@@ -125,3 +157,30 @@ def plant_scaled_vectors(emb):
         F.transform("embedding", lambda x: x.cast("double") * 1.5).alias("v"),
     )
     return base.unionByName(planted)
+
+
+def perturbed_vectors(emb, mod: int):
+    """embeddings → the planted copies (vec_id, v double-array) of
+    ``perturbed_vectors_sql(mod)``: same dims, same first-match-wins
+    order. The original id is renamed first because a lambda that
+    reads vec_id while the same select aliases the shifted id AS
+    vec_id resolves to that lateral alias (Spark 3.4+) and perturbs
+    the wrong dims."""
+    from pyspark.sql import functions as F
+
+    j1 = F.col("oid") % 64
+    j2 = (F.col("oid") * 7) % 64
+    eps = VEC_PERTURB_EPS
+    return (
+        emb.filter(F.col("vec_id") % mod == 0)
+        .select(F.col("vec_id").alias("oid"), "embedding")
+        .select(
+            (F.col("oid") + PLANT_ID_OFFSET).alias("vec_id"),
+            F.transform(
+                "embedding",
+                lambda x, i: F.when(i == j1, x.cast("double") + eps)
+                .when(i == j2, x.cast("double") - eps)
+                .otherwise(x.cast("double")),
+            ).alias("v"),
+        )
+    )

@@ -238,24 +238,12 @@ def _pin_rdd(pinned: DataFrame):
     return pinned._jdf.queryExecution().analyzed().rdd()
 
 
-def pinned_rdd_ids(spark: SparkSession) -> dict:
-    """id -> java RDD handle for every persisted RDD — the only
-    handle PySpark exposes to a localCheckpoint's blocks. Used by
-    iterative loops to release a finished sweep's pinned blocks
-    (the round-8 advice lesson: intra-query pins accumulate for the
-    query's whole lifetime otherwise); the py4j drift guard makes a
-    moved JVM surface cost only memory, never correctness."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(j.id()): j for j in jmap.values()}
-    except Exception:  # py4j surface moved — blocks only cost memory
-        return {}
-
-
 def release_pins(handles) -> None:
-    """Blocking-unpersist a set of java RDD handles (values from
-    ``pinned_rdd_ids``). Never raises: a lost handle only costs
-    memory, never correctness."""
+    """Blocking-unpersist a set of java RDD handles (``_pin_rdd`` of
+    frames the caller pinned itself — never a diff of the session's
+    persisted RDDs, which would also take pins other code made in the
+    meantime). Never raises: a lost handle only costs memory, never
+    correctness."""
     for jrdd in handles:
         try:
             jrdd.unpersist(True)

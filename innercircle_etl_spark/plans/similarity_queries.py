@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from innercircle_etl_spark.functions import vectors as V
+from innercircle_etl_spark.functions.vectors import COS_SQL
 from innercircle_etl_spark.operators.atomic_swap import (
     drop_partitions_atomic,
     overwrite_partitions_atomic,
@@ -30,13 +31,6 @@ from innercircle_etl_spark.plans.registry import load, register, scratch_dir
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
 _TOP_K = 5
 
-_COS_SQL = """
-    list_reduce(list_transform(generate_series(1, len({a})),
-                               i -> {a}[i] * {b}[i]), (x, y) -> x + y)
-    / (sqrt(list_reduce(list_transform({a}, x -> x*x), (x,y) -> x+y))
-       * sqrt(list_reduce(list_transform({b}, x -> x*x), (x,y) -> x+y)))
-"""
-
 _BRUTE_ORACLE = f"""
 WITH e AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -45,7 +39,7 @@ WITH e AS (
 q AS (SELECT vec_id AS query_id, v AS vq FROM e WHERE vec_id < {_N_QUERIES}),
 scored AS (
     SELECT q.query_id, e.vec_id AS neighbor_id,
-           {_COS_SQL.format(a="q.vq", b="e.v")} AS cos
+           {COS_SQL.format(a="q.vq", b="e.v")} AS cos
     FROM q JOIN e ON e.vec_id != q.query_id
 ),
 ranked AS (
@@ -148,7 +142,7 @@ q AS (SELECT vec_id AS query_id, v AS vq, bucket FROM b
       WHERE vec_id < {_N_QUERIES}),
 scored AS (
     SELECT q.query_id, c.vec_id AS neighbor_id, c.bucket,
-           {_COS_SQL.format(a="q.vq", b="c.v")} AS cos
+           {COS_SQL.format(a="q.vq", b="c.v")} AS cos
     FROM q JOIN b c ON q.bucket = c.bucket AND c.vec_id != q.query_id
 ),
 ranked AS (
@@ -249,7 +243,7 @@ def _nearest_cells_cte(
     twin of _ivf_assign (nprobe=1, the inverted file) and _ivf_probes
     (a query's probed cells). ``ccos`` also emits the winning cosine
     (the manifest's mean)."""
-    cos = _COS_SQL.format(a=f"s.{vec}", b="c.cv")
+    cos = COS_SQL.format(a=f"s.{vec}", b="c.cv")
     cols = [*keys, *payload]
     return f"""{name} AS (
     SELECT {", ".join(cols)}, cid{", ccos" if ccos else ""} FROM (
@@ -293,7 +287,7 @@ q AS (SELECT vec_id AS query_id, v AS vq FROM e WHERE vec_id < {_N_QUERIES}),
 )},
 scored AS (
     SELECT p.query_id, a.vec_id AS neighbor_id,
-           {_COS_SQL.format(a="p.vq", b="a.v")} AS cos
+           {COS_SQL.format(a="p.vq", b="a.v")} AS cos
     FROM probes p JOIN assign a ON p.cid = a.cid
     WHERE a.vec_id != p.query_id
 ),
@@ -889,7 +883,7 @@ probes AS (  -- the query's own bucket + all 8 Hamming-1 neighbors
 ),
 scored AS (
     SELECT p.query_id, c.vec_id AS neighbor_id,
-           {_COS_SQL.format(a="p.vq", b="c.v")} AS cos
+           {COS_SQL.format(a="p.vq", b="c.v")} AS cos
     FROM probes p JOIN b c ON p.pbucket = c.bucket
     WHERE c.vec_id != p.query_id
 )
@@ -1122,7 +1116,7 @@ WITH corpus AS ({VEC_SCALE_CORPUS_SQL}
 dup_pairs AS (
     SELECT a.vec_id AS keep_id, b.vec_id AS drop_id
     FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-    WHERE {_COS_SQL.format(a="a.v", b="b.v")} >= 0.99
+    WHERE {COS_SQL.format(a="a.v", b="b.v")} >= 0.99
 ),
 survivors AS (
     SELECT vec_id, v FROM corpus
@@ -1289,7 +1283,7 @@ q AS (SELECT * FROM emb WHERE doc_id % {_RAG_Q_MOD} = 0),
 scored AS (
     SELECT q.doc_id AS q_doc, q.chunk_idx AS q_chunk,
            c.doc_id AS m_doc, c.chunk_idx AS m_chunk,
-           {_COS_SQL.format(a="q.v", b="c.v")} AS cos
+           {COS_SQL.format(a="q.v", b="c.v")} AS cos
     FROM q, emb c
     WHERE NOT (q.doc_id = c.doc_id AND q.chunk_idx = c.chunk_idx)),
 ranked AS (
@@ -1494,7 +1488,7 @@ ann AS (
         scored AS (
             SELECT q.q_doc, q.q_chunk,
                    c.doc_id AS m_doc, c.chunk_idx AS m_chunk,
-                   {_COS_SQL.format(a="q.vq", b="c.v")} AS cos
+                   {COS_SQL.format(a="q.vq", b="c.v")} AS cos
             FROM q JOIN b c ON q.qbucket = c.bucket
             WHERE NOT (q.q_doc = c.doc_id AND q.q_chunk = c.chunk_idx)),
         ranked AS (
@@ -1655,7 +1649,7 @@ q AS (SELECT doc_id AS q_doc, chunk_idx AS q_chunk, v AS vq,
 scored AS (
     SELECT q.q_doc, q.q_chunk,
            c.doc_id AS m_doc, c.chunk_idx AS m_chunk,
-           {_COS_SQL.format(a="q.vq", b="c.v")} AS cos
+           {COS_SQL.format(a="q.vq", b="c.v")} AS cos
     FROM q JOIN b c ON q.qbucket = c.bucket
     WHERE NOT (q.q_doc = c.doc_id AND q.q_chunk = c.chunk_idx)),
 ranked AS (
@@ -1861,7 +1855,7 @@ def _hn_exact_sql(lo: int, hi: int, sfx: str = "") -> str:
 scored_x{sfx} AS (
     SELECT a.anchor_id, e.vec_id AS cand_id,
            (e.label != a.anchor_label) AS is_neg,
-           {_COS_SQL.format(a="a.va", b="e.v")} AS cos
+           {COS_SQL.format(a="a.va", b="e.v")} AS cos
     FROM a{sfx} a JOIN e ON e.vec_id != a.anchor_id
 ),
 {_mine_sql("x", sfx, "anchor_id", "cos DESC, cand_id ASC", _HN_NEGS)}"""
@@ -1878,7 +1872,7 @@ def _hn_cand_sql(sfx: str = "") -> str:
 scored_a{sfx} AS (
     SELECT p.anchor_id, s.vec_id AS cand_id,
            (s.label != p.anchor_label) AS is_neg,
-           {_COS_SQL.format(a="p.va", b="s.v")} AS cos
+           {COS_SQL.format(a="p.va", b="s.v")} AS cos
     FROM probes{sfx} p JOIN assign s
       ON p.cid = s.cid AND s.vec_id != p.anchor_id
 ),
@@ -3251,7 +3245,7 @@ def _ep13_exact_sql(lo: int, hi: int, sfx: str = "") -> str:
 scored_x{sfx} AS (
     SELECT a.a_doc, c.doc_id AS c_doc, c.chunk_idx AS c_chunk,
            (c.doc_id != a.a_doc) AS is_neg,
-           {_COS_SQL.format(a="a.va", b="c.v")} AS cos
+           {COS_SQL.format(a="a.va", b="c.v")} AS cos
     FROM a{sfx} a JOIN emb c
       ON NOT (c.doc_id = a.a_doc AND c.chunk_idx = 0)
 ),
@@ -3269,7 +3263,7 @@ def _ep13_cand_sql(sfx: str = "") -> str:
     )},
 scored_a{sfx} AS (
     SELECT a_doc, c_doc, c_chunk, (c_doc != a_doc) AS is_neg,
-           {_COS_SQL.format(a="va", b="v")} AS cos
+           {COS_SQL.format(a="va", b="v")} AS cos
     FROM (
         SELECT a.a_doc, e2.doc_id AS c_doc, e2.chunk_idx AS c_chunk,
                a.va, e2.v

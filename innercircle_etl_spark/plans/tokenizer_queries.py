@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from innercircle_etl_spark.plans.registry import (
+    _pin_rdd,
     load,
-    pinned_rdd_ids,
     register,
     release_pins,
 )
@@ -244,7 +244,6 @@ def _bpe_train(
     def _s(v):  # typed literal: None must stay a STRING null
         return F.lit(v).cast("string")
 
-    snap = set(pinned_rdd_ids(spark))
     base = (
         word_freqs(spark, sf_dir)
         .select(
@@ -252,9 +251,6 @@ def _bpe_train(
         )
         .localCheckpoint(eager=True)
     )
-    word_pins = {
-        i: j for i, j in pinned_rdd_ids(spark).items() if i not in snap
-    }
     words = base
     merge_rows = []
     total_rows = []
@@ -343,11 +339,11 @@ def _bpe_train(
         # pin the final table once (callers own its release), then
         # drop the base — the replace chain is no longer needed
         final_words = words.localCheckpoint(eager=True)
-        release_pins(word_pins.values())
+        release_pins([_pin_rdd(base)])
         return merge_rows, total_rows, final_words
     # merge rows are literals and totals are pinned — the base word
     # table can be released before the caller materializes them
-    release_pins(word_pins.values())
+    release_pins([_pin_rdd(base)])
     return merge_rows, total_rows, None
 
 

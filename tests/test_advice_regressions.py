@@ -259,6 +259,28 @@ def test_cluster_canonical_releases_intra_query_pins(spark, sf_dir):
     assert keep.count() == 10
 
 
+def test_cluster_canonical_spares_a_pin_made_while_it_runs(
+    spark, sf_dir, monkeypatch
+):
+    """dedup_cluster_canonical releases its pins by handle: a
+    localCheckpoint some other code makes WHILE the query runs (here:
+    during its first table load, inside the MinHash stage) is not the
+    query's to release, and must still be readable afterwards."""
+    import innercircle_etl_spark.plans.dedup_queries as D
+
+    foreign = []
+    real_load = D.load
+
+    def load(s, d, t):
+        if not foreign:
+            foreign.append(spark.range(10).localCheckpoint(eager=True))
+        return real_load(s, d, t)
+
+    monkeypatch.setattr(D, "load", load)
+    assert D.dedup_cluster_canonical(spark, sf_dir).count() > 0
+    assert foreign and foreign[0].count() == 10
+
+
 def test_priority_window_names_all_resolve():
     """Every _PRIORITY name resolves in the registry (round-13
     advice item 4): _ordered silently drops unknown names ('if n in

@@ -50,15 +50,31 @@ def test_ep4_leaves_one_pin_and_repeats_without_cache_drop(spark, sf_dir):
     drop_query_caches(spark)
 
 
+# one row per shared core it exercises (ep4's windows and max fold;
+# the dedup family's MinHash, cosine, margin-multiprobe, Bloom and
+# ingest-split cores), with the one table each reads
+_PERMUTED = [
+    ("ep4_circles", "lineitem"),
+    ("dedup_minhash_lsh", "documents"),
+    ("dedup_incremental_minhash", "documents"),
+    ("dedup_embedding_multiprobe", "embeddings"),
+    ("decon_semantic_embeddings", "embeddings"),
+    ("ep11_ingest_dedup", "documents"),
+]
+
+
 @pytest.mark.parametrize("partitions", [1, 7])
 @pytest.mark.parametrize("seed", [3, 11])
-def test_ep4_matches_oracle_under_row_and_partition_permutation(
-    spark, duck, sf_dir, tmp_path, partitions, seed
+@pytest.mark.parametrize(
+    "name, table", _PERMUTED, ids=[n for n, _ in _PERMUTED]
+)
+def test_matches_oracle_under_row_and_partition_permutation(
+    spark, duck, sf_dir, tmp_path, name, table, seed, partitions
 ):
-    """The per-gen windows and the max fold of ep4 do not depend on
-    row order or partition count: lineitem with its rows shuffled by
-    ``seed``, run at ``partitions`` shuffle partitions, still equals
-    the DuckDB oracle exactly."""
+    """The query does not depend on row order or partition count: its
+    one input table with the rows shuffled by ``seed``, run at
+    ``partitions`` shuffle partitions, still equals the DuckDB oracle
+    exactly."""
     from collections import Counter
 
     import numpy as np
@@ -67,21 +83,21 @@ def test_ep4_matches_oracle_under_row_and_partition_permutation(
     from innercircle_etl_spark.plans import ORACLES
     from innercircle_etl_spark.session import drop_query_caches
 
-    t = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    t = pq.read_table(f"{sf_dir}/{table}.parquet")
     perm = np.random.default_rng(seed).permutation(t.num_rows)
-    pq.write_table(t.take(perm), tmp_path / "lineitem.parquet")
+    pq.write_table(t.take(perm), tmp_path / f"{table}.parquet")
 
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(partitions))
     try:
-        df = QUERIES["ep4_circles"](spark, str(tmp_path))
+        df = QUERIES[name](spark, str(tmp_path))
         cols = sorted(df.columns)
         got = Counter(tuple(r) for r in df.select(cols).collect())
     finally:
         spark.conf.set(key, old)
         drop_query_caches(spark)
-    res = duck.execute(ORACLES["ep4_circles"])
+    res = duck.execute(ORACLES[name])
     names = [d[0] for d in res.description]
     want = Counter(
         tuple(r[names.index(c)] for c in cols) for r in res.fetchall()

@@ -175,16 +175,18 @@ def test_pin_concurrently_releases_siblings_on_failure(spark):
     # receives their handles to release them).
     import pytest
 
-    from innercircle_etl_spark.plans.registry import pinned_rdd_ids
+    def pinned_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(j.id()) for j in jmap.values()}
 
     good = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("x"))
     bad = spark.range(3).select(
         F.expr("raise_error('pin boom')").alias("e")
     )
-    before = set(pinned_rdd_ids(spark))
+    before = pinned_ids()
     with pytest.raises(Exception, match="pin boom"):
         pin_concurrently(good, bad)
-    leaked = set(pinned_rdd_ids(spark)) - before
+    leaked = pinned_ids() - before
     assert not leaked, f"leaked pinned RDDs: {leaked}"
 
 
