@@ -22,10 +22,10 @@ core (``_cet_roi_body``). Two deterministic SCD generations replace
 the reference's wall-clock cadence: the "yesterday" cohort is the
 cascade on data before 1998-01-01, the "today" cohort on all data —
 fixed literals, no now(). Both generations run as one gen-keyed
-cascade: the fact is tagged ``gen`` (1 = all rows, 0 = the rows
-before the cutoff), pinned once by coll, and ``gen`` leads every
-key, window partition and join, so the two cohorts share every
-stage without mixing.
+cascade: the fact is pinned once by coll, each pinned row is tagged
+``gen`` 1 (all rows) and, before the cutoff, also 0, and ``gen``
+leads every key, window partition and join, so the two cohorts
+share every stage without mixing.
 
 Scale notes: every aggregate is a map-side-combinable groupBy on
 (gen, wallet) or (gen, wallet, coll); the only gen-wide windows
@@ -151,7 +151,7 @@ def _top_per_gen(df: DataFrame, *order) -> DataFrame:
 
 def _circle_staging(fact: DataFrame) -> DataFrame:
     """Both circles of every SCD generation of a gen-tagged fact
-    pinned by coll, as one DAG: ``gen`` leads every key, so the
+    partitioned by coll, as one DAG: ``gen`` leads every key, so the
     generations share each stage without mixing."""
     # circle 1 — whale worth with concentration guard. The pin's
     # coll partitioning clusters (gen, wallet, coll): no exchange
@@ -233,15 +233,18 @@ def ep4_circles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP4: the circle-cohort mapping with its SCD flag flip — see
     module docstring. Output = the post-merge
     ``insider_to_circle_mapping``: yesterday's cohort (gen 0) flipped
-    ``is_current=false``, today's (gen 1) appended ``true``."""
-    fact = load_fact(spark, sf_dir)
-    tagged = fact.withColumn("gen", F.lit(1)).unionByName(
-        fact.filter(
-            F.col("ev_date") < F.lit(_PREV_CUTOFF).cast("date")
-        ).withColumn("gen", F.lit(0))
+    ``is_current=false``, today's (gen 1) appended ``true``. One pin
+    of the plain fact; a row before the cutoff fans out to both
+    generations over it (Generate keeps the pin's coll partitioning)."""
+    prev = F.col("ev_date") < F.lit(_PREV_CUTOFF).cast("date")
+    gens = F.when(prev, F.array(F.lit(1), F.lit(0))).otherwise(
+        F.array(F.lit(1))
+    )
+    tagged = pin_by_coll(load_fact(spark, sf_dir)).withColumn(
+        "gen", F.explode(gens)
     )
     curr = F.col("gen") == 1
-    return _circle_staging(pin_by_coll(tagged)).select(
+    return _circle_staging(tagged).select(
         "insider_id",
         "address_rank",
         "circle",

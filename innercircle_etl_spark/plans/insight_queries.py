@@ -398,7 +398,9 @@ def ep6_insight_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exponential time decays (F3, update_etl.py:1058-1064), the
     max-amount scalar subquery (A4, update_etl.py:1081), and the
     weighted feed_importance_score (update_etl.py:1080-1086) —
-    five left joins, all onto broadcast-sized derived dims.
+    three left joins (the per-(wallet, coll) buy rollup, the
+    per-wallet gain rollup, the per-collection first buy), all onto
+    broadcast-sized derived dims.
 
     The decays stay nullable exactly where the reference's left
     joins can produce nulls ("should be inner, left to detect
@@ -428,6 +430,9 @@ def ep6_insight_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ev_date").alias("last_traded_at"),
     )
 
+    # one consumer per aggregate over the cache (AQE reuses no exchange
+    # under a table-cache stage). coll is unique per wallet in
+    # coll_gain, so accuracy's distinct counts are plain counts
     coll_gain = ifact.groupBy("wallet", "coll").agg(
         dsum(
             F.when(F.col("flag") == "R", F.col("price")).otherwise(
@@ -435,27 +440,22 @@ def ep6_insight_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("gain")
     )
-    total_gain = coll_gain.groupBy("wallet").agg(
-        dsum("gain").alias("total_gain")
-    )
-    accuracy = coll_gain.groupBy("wallet").agg(
+    wallet_gain = coll_gain.groupBy("wallet").agg(
+        dsum("gain").alias("total_gain"),
         (
-            F.countDistinct(F.when(F.col("gain") > 0, F.col("coll"))) * 1.0
-            / F.countDistinct("coll")
-        ).alias("pct_profitable")
+            F.count(F.when(F.col("gain") > 0, F.col("coll"))) * 1.0
+            / F.count("coll")
+        ).alias("pct_profitable"),
     )
-    endorse = (
-        ifact.filter(F.col("flag") != "R")
-        .groupBy("wallet", "coll")
-        .agg(F.min("ev_date").alias("first_ts"))
+    # endorsement and portfolio share one rollup of the buy rows;
+    # circle_first (a min of per-wallet mins) reads the rows directly
+    buys = ifact.filter(F.col("flag") != "R")
+    endorse = buys.groupBy("wallet", "coll").agg(
+        F.min("ev_date").alias("first_ts"),
+        F.countDistinct("okey").alias("num_tokens_owned"),
     )
-    circle_first = endorse.groupBy("coll").agg(
-        F.min("first_ts").alias("circle_first_ts")
-    )
-    portfolio = (
-        ifact.filter(F.col("flag") != "R")
-        .groupBy("wallet", "coll")
-        .agg(F.countDistinct("okey").alias("num_tokens_owned"))
+    circle_first = buys.groupBy("coll").agg(
+        F.min("ev_date").alias("circle_first_ts")
     )
     # A4: scalar aggregate as a broadcast single-row cross join
     maxamt = trx.agg(F.max("total_amount").alias("m"))
@@ -468,19 +468,9 @@ def ep6_insight_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base = (
-        trx.join(
-            F.broadcast(
-                portfolio.select(
-                    "wallet", "coll", "num_tokens_owned"
-                )
-            ),
-            ["wallet", "coll"],
-            "left",
-        )
-        .join(F.broadcast(total_gain), "wallet", "left")
-        .join(F.broadcast(accuracy), "wallet", "left")
+        trx.join(F.broadcast(endorse), ["wallet", "coll"], "left")
+        .join(F.broadcast(wallet_gain), "wallet", "left")
         .join(F.broadcast(circle_first), "coll", "left")
-        .join(F.broadcast(endorse), ["wallet", "coll"], "left")
         .crossJoin(F.broadcast(maxamt))
     )
     score = (

@@ -63,6 +63,10 @@ def get_spark(
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
         # nanos timestamp — read as long, loaders convert to micros
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # zstd shuffle/spill/broadcast blocks: the narrow numeric rows
+        # shuffle ~40% fewer bytes than under the lz4 default, for a few
+        # tens of MB of native codec buffers
+        .config("spark.io.compression.codec", "zstd")
     )
     if extra_conf:
         for k, v in extra_conf.items():

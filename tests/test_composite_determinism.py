@@ -51,16 +51,22 @@ def test_ep4_leaves_one_pin_and_repeats_without_cache_drop(spark, sf_dir):
 
 
 # one row per shared core it exercises (ep4's windows and max fold;
-# the dedup family's MinHash, cosine, margin-multiprobe, Bloom and
-# ingest-split cores), with the one table each reads
+# ep6's folded rollups, whose counts rely on coll being unique per
+# wallet; the dedup family's MinHash, cosine, margin-multiprobe, Bloom
+# and ingest-split cores), with the table whose rows it permutes
 _PERMUTED = [
     ("ep4_circles", "lineitem"),
+    ("ep6_insight_feed", "lineitem"),
     ("dedup_minhash_lsh", "documents"),
     ("dedup_incremental_minhash", "documents"),
     ("dedup_embedding_multiprobe", "embeddings"),
     ("decon_semantic_embeddings", "embeddings"),
     ("ep11_ingest_dedup", "documents"),
 ]
+
+# rows that need a larger sibling fixture than the suite's: sf0.001
+# has no insider supplier (s_acctbal > 9000), so ep6's feed is empty
+_SCALE = {"ep6_insight_feed": "sf0.01"}
 
 
 @pytest.mark.parametrize("partitions", [1, 7])
@@ -69,23 +75,31 @@ _PERMUTED = [
     "name, table", _PERMUTED, ids=[n for n, _ in _PERMUTED]
 )
 def test_matches_oracle_under_row_and_partition_permutation(
-    spark, duck, sf_dir, tmp_path, name, table, seed, partitions
+    spark, sf_dir, tmp_path, name, table, seed, partitions
 ):
-    """The query does not depend on row order or partition count: its
-    one input table with the rows shuffled by ``seed``, run at
-    ``partitions`` shuffle partitions, still equals the DuckDB oracle
-    exactly."""
+    """The query does not depend on row order or partition count:
+    ``table`` with the rows shuffled by ``seed`` (every other table
+    as is), run at ``partitions`` shuffle partitions, still equals
+    the DuckDB oracle over the same files exactly."""
+    import os
     from collections import Counter
 
+    import duckdb
     import numpy as np
     import pyarrow.parquet as pq
 
     from innercircle_etl_spark.plans import ORACLES
+    from innercircle_etl_spark.plans.registry import TABLES
     from innercircle_etl_spark.session import drop_query_caches
 
-    t = pq.read_table(f"{sf_dir}/{table}.parquet")
+    src = os.path.abspath(sf_dir)
+    if name in _SCALE:
+        src = os.path.join(os.path.dirname(src), _SCALE[name])
+    t = pq.read_table(f"{src}/{table}.parquet")
     perm = np.random.default_rng(seed).permutation(t.num_rows)
     pq.write_table(t.take(perm), tmp_path / f"{table}.parquet")
+    for other in set(TABLES) - {table}:
+        os.symlink(f"{src}/{other}.parquet", tmp_path / f"{other}.parquet")
 
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -97,9 +111,16 @@ def test_matches_oracle_under_row_and_partition_permutation(
     finally:
         spark.conf.set(key, old)
         drop_query_caches(spark)
+    duck = duckdb.connect()
+    for v in TABLES:
+        duck.execute(
+            f"CREATE VIEW {v} AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/{v}.parquet')"
+        )
     res = duck.execute(ORACLES[name])
     names = [d[0] for d in res.description]
     want = Counter(
         tuple(r[names.index(c)] for c in cols) for r in res.fetchall()
     )
+    duck.close()
     assert got and got == want

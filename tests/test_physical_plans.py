@@ -403,6 +403,92 @@ def test_fused_fact_no_exchange_beyond_repartition(spark, sf_dir):
     assert any("ev_date" in ln for ln in lazy_ex), lazy_ex
 
 
+def test_ep4_pins_each_fact_row_once(spark, sf_dir):
+    """ep4 shuffles the plain fact into its one coll pin and tags the
+    SCD generations over the pin, so the pin's REPARTITION_BY_COL
+    exchange carries each fact row once and no ``gen`` column (the
+    plan prints that exchange once per reference and once more in the
+    cached plan's initial form, hence the distinct count). Over the
+    same pin, build_cet_roi adds no exchange of its own: the as-of
+    union keeps the coll partitioning, so ep3's wallet window is the
+    only shuffle after the pin."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from innercircle_etl_spark.plan_text import real_shuffle_exchanges
+    from innercircle_etl_spark.plans.roi_cascade import (
+        build_cet_roi,
+        load_fact,
+    )
+    from innercircle_etl_spark.session import drop_query_caches
+
+    def strip_id(ln):
+        return re.sub(r", \[plan_id=\d+\]", "", ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" +-:"))
+
+    try:
+        plan = plan_of(spark, sf_dir, "ep4_circles")
+        pins = {
+            strip_id(ln)
+            for ln in real_shuffle_exchanges(plan)
+            if "REPARTITION_BY_COL" in ln
+        }
+        assert len(pins) == 1 and "coll#" in pins.pop(), plan
+        lines = plan.splitlines()
+        for i, ln in enumerate(lines):
+            if "REPARTITION_BY_COL" not in ln:
+                continue
+            for sub in lines[i + 1 :]:
+                if depth(sub) <= depth(ln):
+                    break
+                assert not re.search(r"\bgen#", sub), sub
+
+        cet = build_cet_roi(load_fact(spark, sf_dir))
+        ranked = cet.withColumn(
+            "coll_rank",
+            F.row_number().over(
+                Window.partitionBy("wallet").orderBy(F.col("coll_gain"))
+            ),
+        )
+        after_pin = [
+            ln
+            for ln in _shuffle_exchanges(ranked)
+            if "REPARTITION_BY_COL" not in ln
+        ]
+        assert len(after_pin) == 1, after_pin
+        assert re.search(r"hashpartitioning\(wallet#\d+L, \d+\)", after_pin[0])
+    finally:
+        drop_query_caches(spark)
+
+
+def test_ep6_aggregates_have_one_consumer(spark, sf_dir):
+    """AQE does not reuse an exchange under a table-cache stage, so a
+    (wallet, coll) aggregate over ep6's cached insider fact that two
+    consumers read runs its map stage twice. In the optimized plan
+    every such aggregate appears exactly once; copies are told by the
+    columns they compute, as column pruning trims each copy's output
+    to what its consumer reads."""
+    from collections import Counter
+
+    from innercircle_etl_spark.session import drop_query_caches
+
+    try:
+        df = QUERIES["ep6_insight_feed"](spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        drop_query_caches(spark)
+    computed = Counter(
+        col
+        for agg in re.findall(
+            r"Aggregate \[wallet#\d+L, coll#\d+L\], (.*)", plan
+        )
+        for col in re.findall(r" AS (\w+)#", agg)
+    )
+    assert computed and set(computed.values()) == {1}, computed
+
+
 def test_ivf_assignment_is_mapside_argmax(spark, sf_dir):
     """The IVF/Lloyd cell assignment must be the partial-aggregated
     max(struct) argmax, never a window over the corpus x codebook

@@ -12,10 +12,11 @@ Usage: python tools/plan_report.py   (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from innercircle_etl_spark.plan_text import real_shuffle_exchanges  # noqa: E402
 from innercircle_etl_spark.plans import QUERIES  # noqa: E402
